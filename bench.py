@@ -20,6 +20,7 @@ import urllib.request
 
 import pandas as pd
 
+from sparkstreamingtohdfsofsensorsdata_spark import shared
 from sparkstreamingtohdfsofsensorsdata_spark.registry import load_all
 from sparkstreamingtohdfsofsensorsdata_spark.session import build_session
 
@@ -219,212 +220,6 @@ def _warmup(spark, sf_dir: str) -> None:
     spark.range(1_000_000).repartition(32).localCheckpoint().count()
 
 
-# The SimHash dedup family shares two memoized intermediates
-# (llm/dedup): the banded-pair table (_simhash_banded_pairs, ~2s cold at
-# sf0.1) and the CC label table built on it (_cc_labels, ~5s cold) — the
-# production "persist once, read downstream" shape. Under a naive
-# sequential pass, whichever family member happens to run FIRST in
-# registry order pays the one-time materializations, so per-key times
-# (and the committed floors) silently re-attribute whenever the
-# verification rotation reorders the family. Pin each cost to a
-# canonical payer instead: the pair build to the pair query, the label
-# propagation to the CC query. Before any OTHER member runs against a
-# cold memo, the intermediate is materialized outside that member's
-# timed region and the cost is charged to its payer's slot — every
-# rotation order yields the same per-key numbers (pair payer ≈ cold
-# build, label payer ≈ propagation, q_llm_dedup_keep ≈ its own
-# marginal broadcast-drop scan).
-CC_PAYER_PAIRS = "q_llm_simhash_banded"
-CC_PAYER_LABELS = "q_llm_dedup_clusters"
-CC_FAMILY = ("q_llm_simhash_banded", "q_llm_dedup_clusters", "q_llm_dedup_keep")
-CC_LABEL_CONSUMERS = ("q_llm_dedup_clusters", "q_llm_dedup_keep")
-
-# Same pattern for the ANN ground truth (llm/similarity
-# _exact_topk_full): the exact tier's own output AND both recall tiers
-# read ONE memoized exact top-k table; pin its build to the exact tier
-# itself — it is literally that key's computation — so rotation order
-# never re-attributes it. (r11, VERDICT r10 item 2: the payer used to
-# be q_llm_sim_topk_lsh, which buried the contention-sensitive
-# brute-force build inside the LSH key's number — the root cause of
-# its cross-round 1.7-4.9 s "noise band". The LSH number now measures
-# the LSH probe alone.)
-ANN_PAYER_EXACT = "q_llm_sim_topk"
-ANN_EXACT_CONSUMERS = (
-    "q_llm_sim_topk",
-    "q_llm_sim_topk_lsh",
-    "q_llm_sim_topk_ivf",
-    "q_llm_sim_topk_pq",
-)
-
-# And for the edge LAYER all twelve graph kernels read (operators/
-# graph: copurchase_edges + sym_edges + degree_table, memoized per
-# session/sf — r13 added the symmetric adjacency and degree memos):
-# the builds (lineitem self-join + distinct, the symmetric union, the
-# degree groupBy) are charged to the degree key.
-GRAPH_PAYER = "q_graph_degree"
-GRAPH_FAMILY = (
-    "q_graph_degree",
-    "q_graph_triangles",
-    "q_graph_pagerank",
-    "q_graph_common_neighbors",
-    "q_graph_bfs",
-    "q_graph_wcc",
-    "q_graph_kcore",
-    "q_graph_assortativity",
-    "q_graph_modularity",
-    "q_graph_local_clustering",
-    "q_graph_label_propagation",
-    "q_graph_landmark_closeness",
-)
-
-# The per-graph wedge-orientation probe (operators/graph
-# .triangle_orientation, memoized per session/sf since r12) is shared
-# by both wedge consumers; its one run is charged to the triangle key
-# (it is literally that key's plan decision), so whichever of the two
-# keys the rotation runs first, per-key numbers stay stable.
-TRI_PAYER = "q_graph_triangles"
-TRI_FAMILY = ("q_graph_triangles", "q_graph_local_clustering")
-
-# And for the co-purchase CC label table (operators/graph
-# .cc_labels_graph, memoized per session/sf since r13): q_graph_wcc's
-# own computation IS the label propagation, so it pays; modularity
-# consumes the same labels to score the partition.
-GRAPH_CC_PAYER = "q_graph_wcc"
-GRAPH_CC_CONSUMERS = ("q_graph_wcc", "q_graph_modularity")
-
-
-def _graph_edges_cold(spark, sf_dir: str) -> bool:
-    from sparkstreamingtohdfsofsensorsdata_spark.operators import graph
-
-    return not graph.edges_warm(spark, sf_dir)
-
-
-def _tri_orientation_cold(spark, sf_dir: str) -> bool:
-    from sparkstreamingtohdfsofsensorsdata_spark.operators import graph
-
-    return not graph.orientation_warm(spark, sf_dir)
-
-
-def _tri_materialize_orientation(spark, sf_dir: str) -> float:
-    """Run the shared wedge-orientation probe AND materialize the
-    closed-triangle corner table (r13: both wedge consumers read the
-    memoized corners; the build is the triangle key's own wedge join).
-    Assumes the edge-layer memos are warm — the edges prepay block
-    runs first. Cost charged to TRI_PAYER's slot by the caller."""
-    from sparkstreamingtohdfsofsensorsdata_spark.operators.graph import (
-        triangle_node_counts,
-        triangle_orientation,
-    )
-
-    start = time.perf_counter()
-    triangle_orientation(spark, sf_dir)
-    triangle_node_counts(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    return time.perf_counter() - start
-
-
-def _graph_materialize_edges(spark, sf_dir: str) -> float:
-    """Build the shared edge-layer memos (edge list -> symmetric
-    adjacency -> degree table -> adjacency arrays; r13 CPU diet + r14
-    array layout) in two actions — the noop write of the degree table
-    forces the first three lazy checkpoints, the adjacency-array write
-    forces the fourth. Cost charged to GRAPH_PAYER's slot by the
-    caller."""
-    from sparkstreamingtohdfsofsensorsdata_spark.operators.graph import (
-        adj_arrays,
-        degree_table,
-    )
-
-    start = time.perf_counter()
-    degree_table(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    adj_arrays(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - start
-
-
-def _graph_cc_cold(spark, sf_dir: str) -> bool:
-    from sparkstreamingtohdfsofsensorsdata_spark.operators import graph
-
-    return not graph.cc_warm(spark, sf_dir)
-
-
-def _graph_materialize_cc(spark, sf_dir: str) -> float:
-    """Run the co-purchase CC label propagation now (r13: q_graph_wcc
-    and q_graph_modularity share one memoized label table). Cost
-    charged to GRAPH_CC_PAYER's slot by the caller."""
-    from sparkstreamingtohdfsofsensorsdata_spark.operators.graph import (
-        cc_labels_graph,
-    )
-
-    start = time.perf_counter()
-    cc_labels_graph(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    return time.perf_counter() - start
-
-
-def _ann_exact_cold(spark, sf_dir: str) -> bool:
-    from sparkstreamingtohdfsofsensorsdata_spark.llm import similarity
-
-    return not similarity.exact_topk_warm(spark, sf_dir)
-
-
-def _ann_materialize_exact(spark, sf_dir: str) -> float:
-    """Build the shared exact-top-k ground truth now; return the cost
-    (charged to ANN_PAYER_EXACT's slot by the caller)."""
-    from sparkstreamingtohdfsofsensorsdata_spark.llm.similarity import (
-        _exact_topk_full,
-    )
-
-    start = time.perf_counter()
-    _exact_topk_full(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    return time.perf_counter() - start
-
-
-def _cc_pairs_cold(spark, sf_dir: str) -> bool:
-    # Warmth via dedup's own (path, fingerprint) key — a truthiness
-    # check on the dict would read a stale-fingerprint entry as warm
-    # and let the rebuild land inside a consumer's timed region.
-    from sparkstreamingtohdfsofsensorsdata_spark.llm import dedup
-
-    return not dedup.pairs_warm(spark, sf_dir)
-
-
-def _cc_labels_cold(spark, sf_dir: str) -> bool:
-    from sparkstreamingtohdfsofsensorsdata_spark.llm import dedup
-
-    return not dedup.labels_warm(spark, sf_dir)
-
-
-def _cc_materialize_pairs(spark, sf_dir: str) -> float:
-    """Build the shared banded-pair table now; return the wall-clock
-    cost (charged to CC_PAYER_PAIRS's slot by the caller)."""
-    from sparkstreamingtohdfsofsensorsdata_spark.llm.dedup import (
-        _simhash_banded_pairs,
-    )
-
-    start = time.perf_counter()
-    _simhash_banded_pairs(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    return time.perf_counter() - start
-
-
-def _cc_materialize_labels(spark, sf_dir: str) -> float:
-    """Run the CC label propagation now (assumes the pair table is
-    already warm); return the wall-clock cost (charged to
-    CC_PAYER_LABELS's slot by the caller)."""
-    from sparkstreamingtohdfsofsensorsdata_spark.llm.dedup import _cc_labels
-
-    start = time.perf_counter()
-    _cc_labels(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - start
-
-
 def _load_1m() -> float:
     """1-minute load average — the contention index recorded per key.
 
@@ -438,41 +233,14 @@ def _load_1m() -> float:
         return -1.0
 
 
-def _run_one(spec, spark, sf_dir: str, cold: str | None = None) -> float:
-    # Rerun-phase honesty: the pair/label memos legitimately carry
-    # across the sequential first pass, but a RERUN of a payer must not
-    # get credited a warm-cache time; clear EXACTLY what that payer's
-    # first-pass number was charged for, so min(first, rerun) compares
-    # two honest runs. "pairs" (CC_PAYER_PAIRS) drops the pair memo
-    # only — its charged number is the pair build, and it never reads
-    # labels, so dropping the label memo too would force a later
-    # q_llm_dedup_keep rerun to pay a cold label recompute its
-    # first-pass number never paid (guaranteed-useless rerun, burning
-    # rerun-deadline budget). "labels" (CC_PAYER_LABELS) drops only the
-    # label memo — its charged number is propagation over an
-    # already-warm pair table. q_llm_dedup_keep stays warm.
-    from sparkstreamingtohdfsofsensorsdata_spark.llm import dedup
+def _delta(before: float | None, after: float | None) -> float | None:
+    """Meter reading between two samples; None if either failed."""
+    if before is None or after is None:
+        return None
+    return round(after - before, 3)
 
-    if cold == "pairs":
-        dedup.clear_pair_memo(spark)
-    elif cold == "labels":
-        dedup.clear_label_memo(spark)
-    elif cold == "ann_exact":
-        from sparkstreamingtohdfsofsensorsdata_spark.llm import similarity
 
-        similarity.clear_exact_memo(spark)
-    elif cold == "graph_edges":
-        from sparkstreamingtohdfsofsensorsdata_spark.operators import graph
-
-        graph.clear_edges_memo(spark)
-    elif cold == "tri_orient":
-        from sparkstreamingtohdfsofsensorsdata_spark.operators import graph
-
-        graph.clear_orientation_memo(spark)
-    elif cold == "graph_cc":
-        from sparkstreamingtohdfsofsensorsdata_spark.operators import graph
-
-        graph.clear_cc_memo(spark)
+def _run_one(spec, spark, sf_dir: str) -> float:
     start = time.perf_counter()
     df = spec.fn(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
@@ -712,109 +480,43 @@ def main() -> None:
     py_cpus: dict[str, float] = {}  # Python-worker CPU s of the KEPT run
     loads: dict[str, float] = {}  # 1-min load when the key's KEPT run started
     reruns: dict[str, float] = {}  # rerun wall-clock for adjudicated keys
-    # intermediate costs fronted for their canonical payers (see above)
-    prepaid = {
-        CC_PAYER_PAIRS: 0.0,
-        CC_PAYER_LABELS: 0.0,
-        ANN_PAYER_EXACT: 0.0,
-        GRAPH_PAYER: 0.0,
-        TRI_PAYER: 0.0,
-        GRAPH_CC_PAYER: 0.0,
-    }
-    prepaid_cpu = dict.fromkeys(prepaid, 0.0)
-    prepaid_py = dict.fromkeys(prepaid, 0.0)
-    # Audit trail (VERDICT r12 item 2): every shared-memo build this
-    # run actually executed — payer slot it was charged to, the key
-    # boundary that triggered it ("<upfront>" for the pinned block
-    # below), wall and CPU. Lands in bench_last.json.
+    # Audit trail (VERDICT r12 item 2): every shared-intermediate
+    # prepay this run executed — the payer key it was charged to, the
+    # trigger ("<upfront>": the pinned block below), wall, executor CPU
+    # and Python-worker CPU. Lands in bench_last.json.
     memo_payments: list[dict] = []
 
-    def charge(payer: str, build_fn, trigger: str) -> None:
-        """Run a payer-charged materialization, attributing its
-        wall-clock, executor CPU, and Python-worker CPU to the payer's
-        slot."""
-        nonlocal cursor, py_cursor
-        wall = build_fn(spark, sf_dir)
-        prepaid[payer] += wall
-        after = meter.sample()
-        cpu = None
-        if cursor is not None and after is not None:
-            cpu = round(after - cursor, 3)
-            prepaid_cpu[payer] += after - cursor
-        cursor = after
-        py_after = pymeter.sample()
-        if py_cursor is not None and py_after is not None:
-            prepaid_py[payer] += py_after - py_cursor
-        py_cursor = py_after
-        memo_payments.append(
-            {"payer": payer, "trigger": trigger, "wall_s": round(wall, 3), "cpu_s": cpu}
-        )
-
-    # Pin memo payment to the canonical payers BEFORE any key's timer
-    # starts (VERDICT r12 item 2): build every shared intermediate now,
-    # in dependency order, each charged to its payer's slot. The main
-    # loop then times every key against fully-warm memos regardless of
-    # how the verification rotation reordered the registry — no run
-    # order can re-attribute a build. The lazy in-loop charges below
-    # remain as a safety net (no-ops while the memos stay warm) and
-    # record their trigger key if they ever fire.
-    for payer, build_fn, cold_fn in (
-        (GRAPH_PAYER, _graph_materialize_edges, _graph_edges_cold),
-        (TRI_PAYER, _tri_materialize_orientation, _tri_orientation_cold),
-        (GRAPH_CC_PAYER, _graph_materialize_cc, _graph_cc_cold),
-        (CC_PAYER_PAIRS, _cc_materialize_pairs, _cc_pairs_cold),
-        (CC_PAYER_LABELS, _cc_materialize_labels, _cc_labels_cold),
-        (ANN_PAYER_EXACT, _ann_materialize_exact, _ann_exact_cold),
-    ):
+    # Pin every shared intermediate (shared.py) to its declared payer
+    # BEFORE any key's timer starts: build each payer's intermediates
+    # now, in dependency order, and charge the cost to the payer's slot
+    # below. The main loop then times every key against warm
+    # intermediates whatever order the registry runs them in. A failed
+    # prepay leaves the build to whichever consumer runs first, which
+    # then pays it inside its own timed run — the honest attribution
+    # when the shared build is broken.
+    for payer in shared.payers():
+        start = time.perf_counter()
         try:
-            if cold_fn(spark, sf_dir):
-                charge(payer, build_fn, "<upfront>")
+            shared.prepay(spark, sf_dir, payer)
         except Exception as exc:
             print(f"bench: upfront prepay for {payer} failed: {exc}", file=sys.stderr)
+            cursor = meter.sample()  # don't charge the wreckage downstream
+            py_cursor = pymeter.sample()
+            continue
+        wall = time.perf_counter() - start
+        after, py_after = meter.sample(), pymeter.sample()
+        memo_payments.append(
+            {
+                "payer": payer,
+                "trigger": "<upfront>",
+                "wall_s": round(wall, 3),
+                "cpu_s": _delta(cursor, after),
+                "py_cpu_s": _delta(py_cursor, py_after),
+            }
+        )
+        cursor, py_cursor = after, py_after
 
     for name, spec in specs.items():
-        # The payer-charged materializations sit OUTSIDE the consumer's
-        # try: a pair/label build failure must not mark the CONSUMER
-        # failed (its own query never ran) — the consumer's timed run
-        # below then simply pays the cost itself, which is also the
-        # honest attribution when the shared build is broken.
-        try:
-            if name in CC_FAMILY and name != CC_PAYER_PAIRS and _cc_pairs_cold(
-                spark, sf_dir
-            ):
-                charge(CC_PAYER_PAIRS, _cc_materialize_pairs, name)
-            if (
-                name in CC_LABEL_CONSUMERS
-                and name != CC_PAYER_LABELS
-                and _cc_labels_cold(spark, sf_dir)
-            ):
-                charge(CC_PAYER_LABELS, _cc_materialize_labels, name)
-            if (
-                name in ANN_EXACT_CONSUMERS
-                and name != ANN_PAYER_EXACT
-                and _ann_exact_cold(spark, sf_dir)
-            ):
-                charge(ANN_PAYER_EXACT, _ann_materialize_exact, name)
-            if (
-                name in GRAPH_FAMILY
-                and name != GRAPH_PAYER
-                and _graph_edges_cold(spark, sf_dir)
-            ):
-                charge(GRAPH_PAYER, _graph_materialize_edges, name)
-            if (
-                name in TRI_FAMILY
-                and name != TRI_PAYER
-                and _tri_orientation_cold(spark, sf_dir)
-            ):
-                charge(TRI_PAYER, _tri_materialize_orientation, name)
-            if (
-                name in GRAPH_CC_CONSUMERS
-                and name != GRAPH_CC_PAYER
-                and _graph_cc_cold(spark, sf_dir)
-            ):
-                charge(GRAPH_CC_PAYER, _graph_materialize_cc, name)
-        except Exception as exc:
-            print(f"bench: prepay for {name} failed: {exc}", file=sys.stderr)
         try:
             # record the load locally and commit it only on success —
             # loads[] documents the load when the key's KEPT run
@@ -836,23 +538,22 @@ def main() -> None:
             timings[name] = -1.0
             cursor = meter.sample()  # don't charge the wreckage downstream
             py_cursor = pymeter.sample()
-    for payer, cost in prepaid.items():
-        if prepaid_cpu.get(payer) and cpus.get(payer, -1.0) >= 0:
-            cpus[payer] = round(cpus[payer] + prepaid_cpu[payer], 3)
-        if prepaid_py.get(payer) and py_cpus.get(payer, -1.0) >= 0:
-            py_cpus[payer] = round(py_cpus[payer] + prepaid_py[payer], 3)
-        if not cost:
-            continue
-        if timings.get(payer, -1.0) >= 0:
-            timings[payer] = round(timings[payer] + cost, 3)
-        else:
+    for pay in memo_payments:
+        payer = pay["payer"]
+        if timings.get(payer, -1.0) < 0:
             # The build cost was really paid but its payer's own query
             # failed; say so instead of silently shrinking the total.
             print(
-                f"bench: {cost:.3f}s of prepaid intermediate build is "
+                f"bench: {pay['wall_s']:.3f}s of prepaid intermediate build is "
                 f"unreported ({payer} failed)",
                 file=sys.stderr,
             )
+            continue
+        timings[payer] = round(timings[payer] + pay["wall_s"], 3)
+        if pay["cpu_s"] is not None and payer in cpus:
+            cpus[payer] = round(cpus[payer] + pay["cpu_s"], 3)
+        if pay["py_cpu_s"] is not None and payer in py_cpus:
+            py_cpus[payer] = round(py_cpus[payer] + pay["py_cpu_s"], 3)
 
     # This host's CPU budget swings ~10x on a multi-second cadence
     # (measured: 81..890 fixed-size GEMMs per 5s window), so a single
@@ -927,17 +628,6 @@ def main() -> None:
                 or timings[n] > 1.3 * floor[n]
             )
         }
-        # Each payer carries its intermediate's cost regardless of
-        # registry order (see the attribution block above), so a payer
-        # rerun must start correspondingly cold — see _run_one.
-        cold_mode = {
-            CC_PAYER_PAIRS: "pairs",
-            CC_PAYER_LABELS: "labels",
-            ANN_PAYER_EXACT: "ann_exact",
-            GRAPH_PAYER: "graph_edges",
-            TRI_PAYER: "tri_orient",
-            GRAPH_CC_PAYER: "graph_cc",
-        }
         # Biggest absolute excess over the proven floor first: a 7s key
         # 2s over floor outranks a 0.5s key 0.3s over, and the cheap
         # tail of small noisy keys still fits before the deadline.
@@ -947,27 +637,18 @@ def main() -> None:
             if time.perf_counter() > deadline:
                 break
             try:
+                # A payer's kept number includes its shared builds, so
+                # its rerun must start cold for exactly those builds:
+                # drop that payer's intermediates (a no-op for a key
+                # that pays for none) so min(first, rerun) compares two
+                # honest runs.
+                shared.clear(spark, name)
                 rerun_load = _load_1m()
-                rerun = round(
-                    _run_one(
-                        specs[name], spark, sf_dir, cold=cold_mode.get(name)
-                    ),
-                    3,
-                )
-                after = meter.sample()
-                rerun_cpu = (
-                    round(after - cursor, 3)
-                    if cursor is not None and after is not None
-                    else None
-                )
-                cursor = after
-                py_after = pymeter.sample()
-                rerun_py = (
-                    round(py_after - py_cursor, 3)
-                    if py_cursor is not None and py_after is not None
-                    else None
-                )
-                py_cursor = py_after
+                rerun = round(_run_one(specs[name], spark, sf_dir), 3)
+                after, py_after = meter.sample(), pymeter.sample()
+                rerun_cpu = _delta(cursor, after)
+                rerun_py = _delta(py_cursor, py_after)
+                cursor, py_cursor = after, py_after
                 reruns[name] = rerun
                 if rerun < timings[name]:
                     timings[name] = rerun

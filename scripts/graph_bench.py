@@ -1,9 +1,9 @@
 """Standalone graph-family timing harness (r14 CPU-diet work).
 
-Runs the memo builds + the twelve q_graph_* keys serialized in one
-fresh session, reporting per-phase wall and executor CPU via bench's
-_CpuMeter — the same accounting bench.py charges, without the other
-296 keys. Usage:
+Runs the shared-intermediate prepay of every selected payer key + the
+twelve q_graph_* keys serialized in one fresh session, reporting
+per-phase wall and executor CPU via bench's _CpuMeter — the same
+accounting bench.py charges, without the other 311 keys. Usage:
 
     python scripts/graph_bench.py [sf_dir] [key_prefix ...]
 """
@@ -16,6 +16,7 @@ here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, here)
 
 import bench  # noqa: E402
+from sparkstreamingtohdfsofsensorsdata_spark import shared  # noqa: E402
 from sparkstreamingtohdfsofsensorsdata_spark.session import build_session  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -60,9 +61,9 @@ def phase(name, fn):
     print(f"{name:36s} wall {wall:7.2f}  cpu {cpu:8.2f}", flush=True)
 
 
-phase("<edges+sym+degree>", lambda: bench._graph_materialize_edges(spark, SF))
-phase("<tri_orientation+corners>", lambda: bench._tri_materialize_orientation(spark, SF))
-phase("<cc_labels>", lambda: bench._graph_materialize_cc(spark, SF))
+for payer in shared.payers():
+    if payer in specs:
+        phase(f"<prepay {payer}>", lambda p=payer: shared.prepay(spark, SF, p))
 for name, spec in specs.items():
     phase(name, lambda s=spec: s.fn(spark, SF).write.format("noop").mode("overwrite").save())
 

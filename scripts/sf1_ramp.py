@@ -53,7 +53,7 @@ spark = build_session(
 )
 spark.sparkContext.setLogLevel("ERROR")
 
-from sparkstreamingtohdfsofsensorsdata_spark.llm import dedup  # noqa: E402
+from sparkstreamingtohdfsofsensorsdata_spark import shared  # noqa: E402
 from sparkstreamingtohdfsofsensorsdata_spark.registry import load_all  # noqa: E402
 
 specs = load_all()
@@ -72,22 +72,13 @@ for tier, sf in TIERS.items():
     # per-key rows measure the kernels, not whichever key ran first
     # (the r16 first-cut ramp charged ~600 CPU-s of edge builds to
     # q_graph_common_neighbors and read as a false 18x)
-    dedup.clear_pair_memo(spark)
-    for attr in list(vars(spark).keys()):
-        if attr.endswith("_memo"):
-            getattr(spark, attr).clear()
+    shared.clear_all(spark)
     cursor = meter.sample()
     tier_out = {}
-    memo_phases = [
-        ("<graph edges+sym+degree>", lambda: bench._graph_materialize_edges(spark, sf)),
-        ("<tri orientation+corners>", lambda: bench._tri_materialize_orientation(spark, sf)),
-        ("<graph cc_labels>", lambda: bench._graph_materialize_cc(spark, sf)),
-        ("<simhash pairs>", lambda: bench._cc_materialize_pairs(spark, sf)),
-        ("<dedup cc labels>", lambda: bench._cc_materialize_labels(spark, sf)),
-    ]
-    for pname, fn in memo_phases:
+    for payer in shared.payers():
+        pname = f"<prepay {payer}>"
         t0 = time.perf_counter()
-        fn()
+        shared.prepay(spark, sf, payer)
         wall = time.perf_counter() - t0
         after = meter.sample()
         cpu = (after - cursor) if cursor is not None and after is not None else -1

@@ -33,12 +33,12 @@ all 32 workers.
 
 Failure posture: ``_prewarm`` is wrapped defensively — a missing
 optional library degrades to the stock behavior, never a dead daemon.
-Deployment: ``session.build_session`` sets the conf only when this
-package is importable from a real directory on the worker hosts'
-PYTHONPATH (trivially true in local mode, where it also exports the
-path before the JVM launches); a cluster deploy that pip-installs the
-package on executors gets the same win by setting the same two
-settings (PYTHONPATH is then already correct).
+Deployment: ``session.build_session`` sets the conf only for a
+``local``/``local[...]`` master whose workers can import this package
+from a real directory (it exports PYTHONPATH right before the JVM
+launches); any other master keeps the stock daemon. A cluster deploy
+that pip-installs the package on executors gets the same win by
+setting the same conf itself (PYTHONPATH is then already correct).
 
 Launch protocol note: ``pyspark.daemon`` resolves the WORKER module
 from ``sys.argv[1]`` at its own import time (the factory launches

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
+from ..shared import shared
 from ..tables import load
 
 TOP_K = 10
@@ -130,33 +131,25 @@ def _exact_topk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@shared("similarity.exact_topk", payer="q_llm_sim_topk")
 def _exact_topk_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (qid, vec_id, rk, dot) ground-truth top-k WITH scores,
-    memoized per (live session, sf_dir) exactly like the dedup family's
-    pair/label tables (same (path, fingerprint) key, same eviction).
+    a shared intermediate (shared.py) like the dedup family's
+    pair/label tables.
 
     One brute-force pass serves THREE consumers: the exact tier's own
     output (q_llm_sim_topk projects neighbor/rk/cosine off it) and both
     ANN tiers' recall ground truth. Before r11 the exact tier and the
     recall memo each ran their own N*Q scoring pass — pure repeat work,
     and the duplicated build was charged to q_llm_sim_topk_lsh's bench
-    slot (ANN_PAYER_EXACT), which is where its cross-round 1.7-4.9 s
+    slot, which is where its cross-round 1.7-4.9 s
     "noise band" actually lived: the brute-force build is the most
     contention-sensitive stage in the family, and the LSH probe itself
     is ~0.5 s (VERDICT r10 item 2 root cause). The exact tier now pays
     for — and reuses — the one materialization. Handle is a lazy
     localCheckpoint: the first consumer materializes, later consumers
     read blocks."""
-    from .dedup import _evict_same_path, _memo, memo_key
-
-    cache = _memo(spark, "_exact_topk_memo")
-    key = memo_key(sf_dir)
-    if key in cache:
-        return cache[key]
-    _evict_same_path(cache, key)
-    full = _exact_topk_plan(spark, sf_dir).localCheckpoint(eager=False)
-    cache[key] = full
-    return full
+    return _exact_topk_plan(spark, sf_dir).localCheckpoint(eager=False)
 
 
 def _exact_topk_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,18 +158,6 @@ def _exact_topk_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _exact_topk_full(spark, sf_dir).select(
         "qid", F.col("vec_id").alias("exact_neighbor")
     )
-
-
-def exact_topk_warm(spark: SparkSession, sf_dir: str) -> bool:
-    """True iff _exact_topk_ids would be served from the memo (bench
-    payer-attribution probe, mirroring dedup.pairs_warm)."""
-    from .dedup import memo_key
-
-    return memo_key(sf_dir) in getattr(spark, "_exact_topk_memo", {})
-
-
-def clear_exact_memo(spark: SparkSession) -> None:
-    getattr(spark, "_exact_topk_memo", {}).clear()
 
 
 def _recall_at_k(exact: DataFrame, approx: DataFrame, name: str) -> DataFrame:

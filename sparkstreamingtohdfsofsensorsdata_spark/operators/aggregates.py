@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..shared import shared
 from ..tables import load
 
 
@@ -1100,6 +1101,21 @@ def _mg_candidates_text(batches):
     )
 
 
+@shared("heavy_hitters.candidates", payer="q_agg_heavy_hitters")
+def _heavy_hitter_candidates(spark: SparkSession, sf_dir: str):
+    """Pass 1's candidate set as a Spark broadcast of sorted gram
+    strings: the union of every partition's Misra-Gries sketch,
+    collected once per (session, fixture). A shared intermediate with
+    the key itself as payer, so repeated calls in one session reuse ONE
+    broadcast instead of leaking a new one per call."""
+    cand_rows = (
+        _docs_stream(spark, sf_dir)
+        .mapInArrow(_mg_candidates_text, "gram string")
+        .collect()
+    )
+    return spark.sparkContext.broadcast(sorted({r.gram for r in cand_rows}))
+
+
 @query(
     "q_agg_heavy_hitters",
     oracle=f"""
@@ -1151,11 +1167,10 @@ def q_agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     full gram cardinality — at 100 TB that is the difference between
     exchanging ~10^2 candidate keys and ~10^9 distinct trigrams. A
     production run fuses the two passes by caching the tokenized
-    stream; here each pass re-derives it from the scan to keep the key
-    stateless."""
+    stream; here each pass re-derives it from the scan, and only the
+    small candidate broadcast is kept per (session, fixture)."""
     docs = _docs_stream(spark, sf_dir)
-    cand_rows = docs.mapInArrow(_mg_candidates_text, "gram string").collect()
-    bc = spark.sparkContext.broadcast(sorted({r.gram for r in cand_rows}))
+    bc = _heavy_hitter_candidates(spark, sf_dir)
 
     def recount(batches):
         import pyarrow as pa

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..shared import shared
 from ..tables import load
 
 # Chained-CTE technique shared with llm/dedup._cc_oracle_ctes: every
@@ -52,6 +53,7 @@ PAGERANK_ROUNDS = 5
 PAGERANK_DAMPING = 0.85
 
 
+@shared("graph.edges", payer="q_graph_degree")
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct undirected co-purchase edges (src < dst) between parts
     sharing an order. r17 (guide §2.3, VERDICT r16 item 5's sketched
@@ -70,29 +72,21 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     only in single-part orders have no edge and are outside the graph
     by construction.
 
-    Memoized per (live session, sf_dir fingerprint) — the same
-    session-attached cache the SimHash dedup family uses (llm/dedup):
-    all twelve graph kernels (degree, triangles, pagerank,
+    A shared intermediate (shared.py), like the SimHash dedup
+    family's: all twelve graph kernels (degree, triangles, pagerank,
     common-neighbors, bfs, wcc, kcore, assortativity, modularity,
-    local-clustering, label-propagation, landmark-closeness —
-    bench.py GRAPH_FAMILY, enumeration pinned by
+    local-clustering, label-propagation, landmark-closeness — every
+    registered q_graph_* key, enumeration pinned by
     tests/test_memo.py::test_graph_family_docstring_in_sync so the
     count can never drift again) read this ONE table, which is the
     production "materialize the edge list once, bucket by src, every
-    kernel reuses it" shape. bench.py charges the build to a canonical
-    payer (GRAPH_PAYER) so per-key numbers stay rotation-stable."""
-    from ..llm.dedup import _evict_same_path, _memo, memo_key
-
-    cache = _memo(spark, "_copurchase_edges_memo")
-    key = memo_key(sf_dir)
-    if key in cache:
-        return cache[key]
-    _evict_same_path(cache, key)
+    kernel reuses it" shape. Its payer is q_graph_degree, so per-key
+    bench numbers stay rotation-stable."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     per_order = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("ps")
     )
-    edges = (
+    return (
         per_order.select("ps", F.posexplode("ps").alias("i", "src"))
         .select(
             "src",
@@ -103,10 +97,9 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # session; ContextCleaner reclaims them when the handle drops
         .localCheckpoint(eager=False)
     )
-    cache[key] = edges
-    return edges
 
 
+@shared("graph.sym", payer="q_graph_degree", reads=("graph.edges",))
 def sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized SYMMETRIC adjacency (both orientations of the
     co-purchase edge list), lazily checkpointed (r13, VERDICT r12
@@ -114,42 +107,30 @@ def sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derived ``_symmetric(edges)`` and most re-aggregated the degree
     table, paying the same union + shuffle up to twelve times per
     bench. At scale this IS the materialized adjacency list bucketed
-    by src that every kernel mounts. Charged to GRAPH_PAYER with the
-    edge build (bench `_graph_materialize_edges`)."""
-    from ..llm.dedup import _evict_same_path, _memo, memo_key
-
-    cache = _memo(spark, "_graph_sym_memo")
-    key = memo_key(sf_dir)
-    if key not in cache:
-        _evict_same_path(cache, key)
-        cache[key] = _symmetric(
-            copurchase_edges(spark, sf_dir)
-        ).localCheckpoint(eager=False)
-    return cache[key]
+    by src that every kernel mounts. Paid by q_graph_degree with the
+    edge build."""
+    return _symmetric(copurchase_edges(spark, sf_dir)).localCheckpoint(
+        eager=False
+    )
 
 
+@shared("graph.degree", payer="q_graph_degree", reads=("graph.sym",))
 def degree_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized (node, degree) table — one map-side-combined
     groupBy over the memoized symmetric adjacency, checkpointed once
     and reused by every kernel that needs degrees or the node set
     (previously each paid its own shuffle). Node-sized, so at 100 TB
-    it broadcasts. Charged to GRAPH_PAYER (it is q_graph_degree's own
-    first aggregation)."""
-    from ..llm.dedup import _evict_same_path, _memo, memo_key
-
-    cache = _memo(spark, "_graph_degree_memo")
-    key = memo_key(sf_dir)
-    if key not in cache:
-        _evict_same_path(cache, key)
-        cache[key] = (
-            sym_edges(spark, sf_dir)
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.count(F.lit(1)).alias("degree"))
-            .localCheckpoint(eager=False)
-        )
-    return cache[key]
+    it broadcasts. Paid by q_graph_degree (it is that key's own first
+    aggregation)."""
+    return (
+        sym_edges(spark, sf_dir)
+        .groupBy(F.col("src").alias("node"))
+        .agg(F.count(F.lit(1)).alias("degree"))
+        .localCheckpoint(eager=False)
+    )
 
 
+@shared("graph.stats", payer="q_graph_degree", reads=("graph.degree",))
 def graph_stats(spark: SparkSession, sf_dir: str) -> dict:
     """Session-memoized graph summary — ``{"nodes", "sym_edges",
     "max_degree"}`` — one aggregate over the memoized degree table
@@ -167,29 +148,22 @@ def graph_stats(spark: SparkSession, sf_dir: str) -> dict:
       ``adj_arrays`` refuses to pack a hub whose degree exceeds
       ``ADJ_HUB_DEGREE_CEILING`` into a single collect_list row.
     """
-    from ..llm.dedup import _evict_same_path, _memo, memo_key
-
-    cache = _memo(spark, "_graph_stats_memo")
-    key = memo_key(sf_dir)
-    if key not in cache:
-        _evict_same_path(cache, key)
-        row = (
-            degree_table(spark, sf_dir)
-            .agg(
-                F.count(F.lit(1)).alias("v"),
-                F.sum("degree").alias("e2"),
-                F.max("degree").alias("dmax"),
-            )
-            .collect()[0]
+    row = (
+        degree_table(spark, sf_dir)
+        .agg(
+            F.count(F.lit(1)).alias("v"),
+            F.sum("degree").alias("e2"),
+            F.max("degree").alias("dmax"),
         )
-        # an EMPTY graph (hostile edge-values fixture: no co-purchase
-        # pairs) aggregates sum/max to NULL — stats are all-zero then
-        cache[key] = {
-            "nodes": int(row["v"]),
-            "sym_edges": int(row["e2"] or 0),
-            "max_degree": int(row["dmax"] or 0),
-        }
-    return cache[key]
+        .collect()[0]
+    )
+    # an EMPTY graph (hostile edge-values fixture: no co-purchase
+    # pairs) aggregates sum/max to NULL — stats are all-zero then
+    return {
+        "nodes": int(row["v"]),
+        "sym_edges": int(row["e2"] or 0),
+        "max_degree": int(row["dmax"] or 0),
+    }
 
 
 # Broadcast a build side only while its estimated size stays under the
@@ -298,6 +272,7 @@ def _node_state(spark: SparkSession, sf_dir: str, df: DataFrame,
     return _maybe_broadcast(df, stats["nodes"] * per_node_bytes)
 
 
+@shared("graph.adj", payer="q_graph_degree", reads=("graph.sym", "graph.stats"))
 def adj_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized adjacency ARRAYS (src, ns: array<long>) of the
     symmetric co-purchase graph (r14, VERDICT r13 item 4 — graph CPU
@@ -310,37 +285,35 @@ def adj_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     2.1 executor-CPU-s for the 5 rounds at sf0.1). At 100 TB this is
     the grouped adjacency-list layout every vertex-centric engine
     (GraphX/Pregel) stores; the explode re-expands to the edge stream
-    inside the stage, never through a shuffle. Charged to GRAPH_PAYER
+    inside the stage, never through a shuffle. Paid by q_graph_degree
     with the edge/degree builds."""
-    from ..llm.dedup import _evict_same_path, _memo, memo_key
-
-    cache = _memo(spark, "_graph_adj_memo")
-    key = memo_key(sf_dir)
-    if key not in cache:
-        _evict_same_path(cache, key)
-        # Hub guard (r15, VERDICT r14 watch item): one node's whole
-        # neighbor list lands in ONE collect_list row, so a power-law
-        # hub past the ceiling must fail loudly BEFORE the build, with
-        # the fallback named, not OOM an executor mid-stage. The stats
-        # read is one collected row off the memoized degree table.
-        dmax = graph_stats(spark, sf_dir)["max_degree"]
-        if dmax > ADJ_HUB_DEGREE_CEILING:
-            raise RuntimeError(
-                f"adj_arrays: max degree {dmax} exceeds the "
-                f"{ADJ_HUB_DEGREE_CEILING}-neighbor single-row ceiling; "
-                "segment hubs into (src, chunk) sub-arrays and switch "
-                "size(ns) consumers (pagerank) to a degree_table join, "
-                "or route this graph through the edge-table kernels"
-            )
-        cache[key] = (
-            sym_edges(spark, sf_dir)
-            .groupBy("src")
-            .agg(F.collect_list("dst").alias("ns"))
-            .localCheckpoint(eager=False)
+    # Hub guard (r15, VERDICT r14 watch item): one node's whole
+    # neighbor list lands in ONE collect_list row, so a power-law
+    # hub past the ceiling must fail loudly BEFORE the build, with
+    # the fallback named, not OOM an executor mid-stage. The stats
+    # read is one collected row off the memoized degree table.
+    dmax = graph_stats(spark, sf_dir)["max_degree"]
+    if dmax > ADJ_HUB_DEGREE_CEILING:
+        raise RuntimeError(
+            f"adj_arrays: max degree {dmax} exceeds the "
+            f"{ADJ_HUB_DEGREE_CEILING}-neighbor single-row ceiling; "
+            "segment hubs into (src, chunk) sub-arrays and switch "
+            "size(ns) consumers (pagerank) to a degree_table join, "
+            "or route this graph through the edge-table kernels"
         )
-    return cache[key]
+    return (
+        sym_edges(spark, sf_dir)
+        .groupBy("src")
+        .agg(F.collect_list("dst").alias("ns"))
+        .localCheckpoint(eager=False)
+    )
 
 
+@shared(
+    "graph.cc",
+    payer="q_graph_wcc",
+    reads=("graph.edges", "graph.sym", "graph.adj", "graph.stats"),
+)
 def cc_labels_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized connected-component labels of the co-purchase
     graph (min-label propagation via the shared llm/dedup library).
@@ -348,95 +321,51 @@ def cc_labels_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_graph_modularity (scores the CC partition) consume the SAME
     label table; before this memo each ran the full pointer-doubling
     iteration independently (r13, VERDICT r12 item 3)."""
-    from ..llm.dedup import _evict_same_path, _memo, memo_key, propagate_min_labels
+    from ..llm.dedup import propagate_min_labels
 
-    cache = _memo(spark, "_graph_cc_memo")
-    key = memo_key(sf_dir)
-    if key not in cache:
-        _evict_same_path(cache, key)
-        pairs = copurchase_edges(spark, sf_dir).select(
-            F.col("src").alias("id_a"), F.col("dst").alias("id_b")
-        )
-        cache[key] = propagate_min_labels(
-            pairs,
-            sym=sym_edges(spark, sf_dir),
-            adj=adj_arrays(spark, sf_dir),
-            # r16: per-round state joins get the heap-gated build hint
-            # (broadcast under cap, shuffle-hash above) — see
-            # _broadcast_cap for the sf1 SMJ cliff this prevents
-            build=lambda df: _node_state(spark, sf_dir, df),
-        )
-    return cache[key]
-
-
-def edges_warm(spark: SparkSession, sf_dir: str) -> bool:
-    """True iff the GRAPH_PAYER-charged intermediates (edge list +
-    symmetric adjacency + degree table) would all be served from
-    memos."""
-    from ..llm.dedup import memo_key
-
-    key = memo_key(sf_dir)
-    return all(
-        key in getattr(spark, attr, {})
-        for attr in (
-            "_copurchase_edges_memo",
-            "_graph_sym_memo",
-            "_graph_degree_memo",
-            "_graph_adj_memo",
-        )
+    pairs = copurchase_edges(spark, sf_dir).select(
+        F.col("src").alias("id_a"), F.col("dst").alias("id_b")
+    )
+    return propagate_min_labels(
+        pairs,
+        sym=sym_edges(spark, sf_dir),
+        adj=adj_arrays(spark, sf_dir),
+        # r16: per-round state joins get the heap-gated build hint
+        # (broadcast under cap, shuffle-hash above) — see
+        # _broadcast_cap for the sf1 SMJ cliff this prevents
+        build=lambda df: _node_state(spark, sf_dir, df),
     )
 
 
-def clear_edges_memo(spark: SparkSession) -> None:
-    """Drop the edge-layer memos (bench rerun honesty: a payer rerun
-    must pay the builds again, not read its own warm cache). The
-    dependent sym/degree memos fall with the edge memo — serving them
-    warm over a cold edge table would split the family's attribution."""
-    for attr in (
-        "_copurchase_edges_memo",
-        "_graph_sym_memo",
-        "_graph_degree_memo",
-        "_graph_adj_memo",
-    ):
-        getattr(spark, attr, {}).clear()
-
-
-def cc_warm(spark: SparkSession, sf_dir: str) -> bool:
-    from ..llm.dedup import memo_key
-
-    return memo_key(sf_dir) in getattr(spark, "_graph_cc_memo", {})
-
-
-def clear_cc_memo(spark: SparkSession) -> None:
-    getattr(spark, "_graph_cc_memo", {}).clear()
-
-
+@shared(
+    "graph.tri_orientation",
+    payer="q_graph_triangles",
+    reads=("graph.edges", "graph.sym", "graph.degree"),
+)
 def triangle_orientation(spark: SparkSession, sf_dir: str) -> tuple:
     """Session-memoized orientation decision for the co-purchase graph
     (r12): BOTH wedge consumers (q_graph_triangles,
     q_graph_local_clustering) need the same per-graph decision, and
     the probe is two aggregations over the edge table — running it
     once per (session, sf) is the production "decide once per
-    materialized graph" shape, and bench.py charges the one probe to a
-    canonical payer (TRI_PAYER) so per-key numbers stay
-    rotation-stable. choose_triangle_orientation stays pure for
-    fixture graphs (tests probe synthetic hubs directly)."""
-    from ..llm.dedup import _evict_same_path, _memo, memo_key
-
-    cache = _memo(spark, "_tri_orientation_memo")
-    key = memo_key(sf_dir)
-    if key not in cache:
-        _evict_same_path(cache, key)
-        cache[key] = choose_triangle_orientation(
-            copurchase_edges(spark, sf_dir),
-            sym=sym_edges(spark, sf_dir),
-            deg=degree_table(spark, sf_dir).select(
-                F.col("node").alias("src"), "degree"
-            ),
-        )
-    return cache[key]
+    materialized graph" shape, and its payer is q_graph_triangles so
+    per-key numbers stay rotation-stable. choose_triangle_orientation
+    stays pure for fixture graphs (tests probe synthetic hubs
+    directly)."""
+    return choose_triangle_orientation(
+        copurchase_edges(spark, sf_dir),
+        sym=sym_edges(spark, sf_dir),
+        deg=degree_table(spark, sf_dir).select(
+            F.col("node").alias("src"), "degree"
+        ),
+    )
 
 
+@shared(
+    "graph.tri_counts",
+    payer="q_graph_triangles",
+    reads=("graph.edges", "graph.tri_orientation", "graph.stats"),
+)
 def triangle_node_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized per-node closed-triangle incidence counts
     ``(node, n_tri)`` under the probed orientation — the folded output
@@ -452,73 +381,49 @@ def triangle_node_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     LINEAR: 65-71 warm CPU-s at sf1 = 7x sf0.1). Folding to node
     incidence INSIDE the build stage keeps the same one-pass
     intersection but checkpoints a node-sized table — the only two
-    consumers ever needed the counts. Charged to TRI_PAYER with the
-    orientation probe (it is the triangle key's own computation)."""
-    from ..llm.dedup import _evict_same_path, _memo, memo_key
-
-    cache = _memo(spark, "_tri_ncounts_memo")
-    key = memo_key(sf_dir)
-    if key not in cache:
-        _evict_same_path(cache, key)
-        edges = copurchase_edges(spark, sf_dir)
-        orient, _, _ = triangle_orientation(spark, sf_dir)
-        oriented = _oriented_edges(edges, orient)
-        # r14 (VERDICT r13 item 4): forward-ADJACENCY-ARRAY intersection
-        # instead of the two-hop hash join. For each oriented edge
-        # (a, b), every c in fwd(a) ∩ fwd(b) closes a triangle — the
-        # same (a, b, c) set the e1⋈e2⋈e3 join emits, but the
-        # sum-in(b)·out(b) wedge stream (49.3M rows at sf0.1) never
-        # exists: the two joins are E rows against the node-sized
-        # forward-array table, and the intersection runs inside the
-        # stage. The orientation probe still matters — it bounds
-        # forward-degree (array width) exactly as it bounded the wedge
-        # fan-out.
-        fwd = oriented.groupBy("src").agg(F.collect_list("dst").alias("ns"))
-        fa = fwd.select(F.col("src").alias("a2"), F.col("ns").alias("ns_a"))
-        fb = fwd.select(F.col("src").alias("b2"), F.col("ns").alias("ns_b"))
-        # r16: the forward-array table must be an explicit gated build
-        # side — at sf1 it outgrows AQE's broadcast conversion and the
-        # un-hinted plan SORTS the E-row-x-array join stream twice
-        # (measured 124x CPU at 10x data; see _broadcast_cap)
-        stats = graph_stats(spark, sf_dir)
-        fwd_bytes = stats["sym_edges"] * 4 + stats["nodes"] * 24
-        fa = _maybe_broadcast(fa, fwd_bytes)
-        fb = _maybe_broadcast(fb, fwd_bytes)
-        cache[key] = (
-            oriented.join(fa, oriented["src"] == F.col("a2"))
-            .join(fb, oriented["dst"] == F.col("b2"))
-            .select(
-                F.col("src").alias("a"),
-                F.col("dst").alias("b"),
-                F.explode(F.array_intersect("ns_a", "ns_b")).alias("c"),
-            )
-            .select(
-                F.explode(F.array(F.col("a"), F.col("b"), F.col("c"))).alias(
-                    "node"
-                )
-            )
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("n_tri"))
-            .localCheckpoint(eager=False)
+    consumers ever needed the counts. Paid by q_graph_triangles with
+    the orientation probe (it is the triangle key's own computation)."""
+    edges = copurchase_edges(spark, sf_dir)
+    orient, _, _ = triangle_orientation(spark, sf_dir)
+    oriented = _oriented_edges(edges, orient)
+    # r14 (VERDICT r13 item 4): forward-ADJACENCY-ARRAY intersection
+    # instead of the two-hop hash join. For each oriented edge
+    # (a, b), every c in fwd(a) ∩ fwd(b) closes a triangle — the
+    # same (a, b, c) set the e1⋈e2⋈e3 join emits, but the
+    # sum-in(b)·out(b) wedge stream (49.3M rows at sf0.1) never
+    # exists: the two joins are E rows against the node-sized
+    # forward-array table, and the intersection runs inside the
+    # stage. The orientation probe still matters — it bounds
+    # forward-degree (array width) exactly as it bounded the wedge
+    # fan-out.
+    fwd = oriented.groupBy("src").agg(F.collect_list("dst").alias("ns"))
+    fa = fwd.select(F.col("src").alias("a2"), F.col("ns").alias("ns_a"))
+    fb = fwd.select(F.col("src").alias("b2"), F.col("ns").alias("ns_b"))
+    # r16: the forward-array table must be an explicit gated build
+    # side — at sf1 it outgrows AQE's broadcast conversion and the
+    # un-hinted plan SORTS the E-row-x-array join stream twice
+    # (measured 124x CPU at 10x data; see _broadcast_cap)
+    stats = graph_stats(spark, sf_dir)
+    fwd_bytes = stats["sym_edges"] * 4 + stats["nodes"] * 24
+    fa = _maybe_broadcast(fa, fwd_bytes)
+    fb = _maybe_broadcast(fb, fwd_bytes)
+    return (
+        oriented.join(fa, oriented["src"] == F.col("a2"))
+        .join(fb, oriented["dst"] == F.col("b2"))
+        .select(
+            F.col("src").alias("a"),
+            F.col("dst").alias("b"),
+            F.explode(F.array_intersect("ns_a", "ns_b")).alias("c"),
         )
-    return cache[key]
-
-
-def orientation_warm(spark: SparkSession, sf_dir: str) -> bool:
-    """True iff the TRI_PAYER-charged intermediates (orientation probe
-    + closed-triangle table) would both be served from memos."""
-    from ..llm.dedup import memo_key
-
-    key = memo_key(sf_dir)
-    return key in getattr(spark, "_tri_orientation_memo", {}) and key in getattr(
-        spark, "_tri_ncounts_memo", {}
+        .select(
+            F.explode(F.array(F.col("a"), F.col("b"), F.col("c"))).alias(
+                "node"
+            )
+        )
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("n_tri"))
+        .localCheckpoint(eager=False)
     )
-
-
-def clear_orientation_memo(spark: SparkSession) -> None:
-    getattr(spark, "_tri_orientation_memo", {}).clear()
-    getattr(spark, "_tri_ncounts_memo", {}).clear()
-
 
 
 def _symmetric(edges: DataFrame) -> DataFrame:

@@ -104,31 +104,49 @@ def _package_zip() -> str:
 FASTDAEMON_MODULE = "sparkstreamingtohdfsofsensorsdata_spark.fastdaemon"
 
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _fastdaemon_available() -> bool:
-    """True iff the warm-fork daemon module (fastdaemon.py) will be
+    """True iff the warm-fork daemon module (fastdaemon.py) can be made
     importable by the Python worker processes — which requires the
     package's parent directory on the PYTHONPATH **environment
     variable** (the daemon is a fresh ``python -m`` process; the
-    driver's sys.path does not reach it). Exports the path when the
-    JVM has not launched yet; if a JVM is already up without it, the
-    daemon module could not import, so report False and leave the
-    stock daemon in place (r17, see fastdaemon.py for the measured
-    rationale)."""
+    driver's sys.path does not reach it). Either the path is already
+    exported, or the JVM has not launched yet and ``build_session``
+    can still export it; a JVM already up without it could not import
+    the daemon module, so the stock daemon stays (r17, see
+    fastdaemon.py for the measured rationale)."""
     from pyspark import SparkContext
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     if not os.path.isfile(os.path.join(pkg_dir, "fastdaemon.py")):
         return False  # running from a zip/egg: not reachable by -m
-    root = os.path.dirname(pkg_dir)
-    current = os.environ.get("PYTHONPATH", "")
-    if root in current.split(os.pathsep):
+    if _PACKAGE_ROOT in os.environ.get("PYTHONPATH", "").split(os.pathsep):
         return True
-    if SparkContext._gateway is not None:
-        return False  # JVM env is frozen and lacks the path
-    os.environ["PYTHONPATH"] = (
-        current + os.pathsep + root if current else root
-    )
-    return True
+    return SparkContext._gateway is None
+
+
+def _python_daemon_conf(master: str) -> dict[str, str]:
+    """The warm-fork daemon conf for ``master``, or nothing. Only a
+    ``local``/``local[...]`` master runs its workers on this host with
+    this process's environment; any other master (``local-cluster``, a
+    standalone/YARN/k8s URL) keeps the stock daemon, since the module
+    may not be importable on its worker hosts."""
+    local = master == "local" or master.startswith("local[")
+    if local and _fastdaemon_available():
+        return {"spark.python.daemon.module": FASTDAEMON_MODULE}
+    return {}
+
+
+def _export_package_root() -> None:
+    """Put the package's parent directory on PYTHONPATH so the worker
+    processes the JVM launches can ``python -m`` the daemon module."""
+    current = os.environ.get("PYTHONPATH", "")
+    if _PACKAGE_ROOT not in current.split(os.pathsep):
+        os.environ["PYTHONPATH"] = (
+            current + os.pathsep + _PACKAGE_ROOT if current else _PACKAGE_ROOT
+        )
 
 
 def build_session(
@@ -211,15 +229,15 @@ def build_session(
     # applied workerfast.activate(), so respawned workers (the JVM
     # reaps the idle pool after a hardcoded 1 minute) cost a bare fork
     # instead of ~0.6 CPU-s of imports, and no task anywhere pays the
-    # per-task zip re-scan / full-gc fixed costs. Gated on the module
-    # being importable by the worker processes — see fastdaemon.py.
-    if _fastdaemon_available():
-        builder = builder.config(
-            "spark.python.daemon.module", FASTDAEMON_MODULE
-        )
-    for key, value in (extra_conf or {}).items():
+    # per-task zip re-scan / full-gc fixed costs. Gated on a local
+    # master and on the module being importable by the worker
+    # processes — see _python_daemon_conf and fastdaemon.py.
+    daemon_conf = _python_daemon_conf(master)
+    for key, value in {**daemon_conf, **(extra_conf or {})}.items():
         builder = builder.config(key, value)
 
+    if daemon_conf:
+        _export_package_root()  # the JVM launching next inherits it
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

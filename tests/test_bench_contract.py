@@ -119,37 +119,3 @@ def test_stdout_line_mass_failure_still_fits():
     assert out["queries_failed_total"] == 138
     line = json.dumps(out, separators=(",", ":"))
     assert len(line) <= bench._STDOUT_BUDGET
-
-
-def test_cc_payer_attribution_is_rotation_independent(spark):
-    # The pair-build and label-propagation costs must land on their
-    # canonical payers no matter which family member the verification
-    # rotation puts first: a consumer hitting a cold memo triggers the
-    # payer-charged materialization, after which the memo is warm and
-    # every member (payers included) runs marginal.
-    from sparkstreamingtohdfsofsensorsdata_spark.llm import dedup
-
-    sf_dir = "/root/testdata/sf0.001"
-    dedup.clear_pair_memo(spark)
-    dedup.clear_label_memo(spark)
-    try:
-        assert bench._cc_pairs_cold(spark, sf_dir)
-        assert bench._cc_labels_cold(spark, sf_dir)
-        assert bench._cc_materialize_pairs(spark, sf_dir) > 0
-        assert not bench._cc_pairs_cold(spark, sf_dir)
-        # pairs alone leave labels cold
-        assert bench._cc_labels_cold(spark, sf_dir)
-        assert bench._cc_materialize_labels(spark, sf_dir) > 0
-        assert not bench._cc_labels_cold(spark, sf_dir)
-        # warmth is fingerprint-exact: another sf_dir is still cold even
-        # though the memo dict is non-empty (the stale-entry trap)
-        assert bench._cc_pairs_cold(spark, "/root/testdata/sf0.01")
-        assert bench.CC_PAYER_PAIRS == "q_llm_simhash_banded"
-        assert bench.CC_PAYER_LABELS == "q_llm_dedup_clusters"
-        assert set(bench.CC_LABEL_CONSUMERS) < set(bench.CC_FAMILY)
-        assert bench.CC_PAYER_PAIRS in bench.CC_FAMILY
-    finally:
-        # the session-scoped fixture outlives this test: a mid-test
-        # assertion failure must not leave warm handles for later tests
-        dedup.clear_pair_memo(spark)
-        dedup.clear_label_memo(spark)

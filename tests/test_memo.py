@@ -1,14 +1,17 @@
 """Session-attached memo hygiene (VERDICT r4 ask #5).
 
-The CC-label and SimHash-pair memos (llm/dedup.py) carry materialized
+The shared intermediates (shared.py — e.g. the CC-label and
+SimHash-pair tables of llm/dedup.py) carry materialized
 localCheckpoint handles across queries in one session — exactly the
 kind of state that silently poisons a cross-scale run if the keying or
-lifetime is wrong. Pin the two contracts:
+lifetime is wrong. Pin the contracts:
 
 - keyed per sf_dir: two scales back-to-back in ONE session each get
   fresh labels, and each result hash-matches a memo-cold recompute;
 - scoped per session OBJECT: a sibling `newSession()` does not see the
-  handles (they die with the session that owns the checkpoint blocks).
+  handles (they die with the session that owns the checkpoint blocks);
+- per declared payer: cold -> prepay -> warm, one object per
+  (session, sf_dir), and clearing one payer leaves every other warm.
 
 Also pins the register_views fingerprint (ADVICE r4): rewriting a
 fixture file in place must invalidate the view memo.
@@ -18,17 +21,27 @@ from __future__ import annotations
 
 import os
 
-from sparkstreamingtohdfsofsensorsdata_spark import registry
+import pytest
+
+from sparkstreamingtohdfsofsensorsdata_spark import registry, shared
 from sparkstreamingtohdfsofsensorsdata_spark.llm.dedup import _cc_labels
 from sparkstreamingtohdfsofsensorsdata_spark.tables import _dir_fingerprint
 
 SF_A = "/root/testdata/sf0.001"
 SF_B = "/root/testdata/sf0.01"
 
+registry.load_all()  # every declaring module imported
+PAYERS = shared.payers()
+
 
 def _clear_memos(spark) -> None:
-    getattr(spark, "_cc_labels_memo", {}).clear()
-    getattr(spark, "_simhash_pairs_memo", {}).clear()
+    shared.clear(spark, "q_llm_dedup_clusters")
+    shared.clear(spark, "q_llm_simhash_banded")
+
+
+def _keys_holding(spark, name: str) -> list:
+    """Store keys (path, fingerprint) that hold intermediate ``name``."""
+    return [k for k, entry in shared._store(spark).items() if name in entry]
 
 
 def _labels(spark, sf_dir):
@@ -40,8 +53,8 @@ def test_cc_memo_keyed_per_sf_dir(spark):
     warm_a = _labels(spark, SF_A)
     warm_b = _labels(spark, SF_B)
     # two scales -> two distinct memo entries, not one overwritten slot
-    assert len(spark._cc_labels_memo) == 2
-    assert len(spark._simhash_pairs_memo) == 2
+    assert len(_keys_holding(spark, "dedup.labels")) == 2
+    assert len(_keys_holding(spark, "dedup.pairs")) == 2
     # sf0.01 has ~10x the docs; identical label sets would mean the
     # second call was served the first scale's handle
     assert warm_a != warm_b
@@ -57,13 +70,14 @@ def test_cc_memo_keyed_per_sf_dir(spark):
 def test_memos_die_with_the_session_object(spark):
     _clear_memos(spark)
     _cc_labels(spark, SF_A)
-    assert spark._cc_labels_memo
+    assert shared.warm(spark, SF_A, "q_llm_dedup_clusters")
     # A sibling session object (shared SparkContext, fresh state) must
-    # not inherit the handles: the memo rides the session attribute,
+    # not inherit the handles: the store rides the session attribute,
     # never a module global.
     sibling = spark.newSession()
-    assert getattr(sibling, "_cc_labels_memo", None) is None
-    assert getattr(sibling, "_simhash_pairs_memo", None) is None
+    assert getattr(sibling, shared._STORE_ATTR, None) is None
+    assert not shared.warm(sibling, SF_A, "q_llm_dedup_clusters")
+    assert not shared.warm(sibling, SF_A, "q_llm_simhash_banded")
     _clear_memos(spark)
 
 
@@ -94,11 +108,12 @@ def test_dedup_memos_keyed_on_file_fingerprint(spark):
     _clear_memos(spark)
     _cc_labels(spark, SF_A)
     fp = _dir_fingerprint(SF_A)
-    assert list(spark._cc_labels_memo) == [(os.path.abspath(SF_A), fp)]
-    assert list(spark._simhash_pairs_memo) == [(os.path.abspath(SF_A), fp)]
+    assert shared.memo_key(SF_A) == (os.path.abspath(SF_A), fp)
+    assert _keys_holding(spark, "dedup.labels") == [(os.path.abspath(SF_A), fp)]
+    assert _keys_holding(spark, "dedup.pairs") == [(os.path.abspath(SF_A), fp)]
     # a changed fingerprint (what a rewrite produces) misses the memo
     stale_key = (os.path.abspath(SF_A), ())
-    assert stale_key not in spark._cc_labels_memo
+    assert stale_key not in shared._store(spark)
     _clear_memos(spark)
 
 
@@ -108,18 +123,15 @@ def test_dedup_memos_evict_superseded_same_path_entries(spark):
     # times would otherwise leak N materialized checkpoint handles
     # (review r6). Simulate the rewrite by planting a stale-fingerprint
     # entry under the same path and recomputing.
-    from sparkstreamingtohdfsofsensorsdata_spark.llm.dedup import memo_key
-
     _clear_memos(spark)
     _cc_labels(spark, SF_A)
     path = os.path.abspath(SF_A)
-    for memo in (spark._cc_labels_memo, spark._simhash_pairs_memo):
-        live = memo[memo_key(SF_A)]
-        memo.clear()
-        memo[(path, ("stale-fingerprint",))] = live
+    store = shared._store(spark)
+    store[(path, ("stale-fingerprint",))] = store.pop(shared.memo_key(SF_A))
     _cc_labels(spark, SF_A)
-    assert list(spark._cc_labels_memo) == [memo_key(SF_A)]
-    assert list(spark._simhash_pairs_memo) == [memo_key(SF_A)]
+    assert [k for k in store if k[0] == path] == [shared.memo_key(SF_A)]
+    assert _keys_holding(spark, "dedup.labels") == [shared.memo_key(SF_A)]
+    assert _keys_holding(spark, "dedup.pairs") == [shared.memo_key(SF_A)]
     _clear_memos(spark)
 
 
@@ -220,62 +232,83 @@ def test_registry_window_is_the_stale_cohort():
 
 def test_graph_family_docstring_in_sync():
     """VERDICT r10 item 5: the copurchase_edges docstring enumerates the
-    graph kernels that share the edge memo; this assertion makes the
-    enumeration (and its spelled-out count) structurally equal to
-    bench.GRAPH_FAMILY so the r9/r10 drift class cannot recur."""
+    graph kernels that share the edge intermediate; this assertion
+    makes the enumeration (and its spelled-out count) structurally
+    equal to the registry's q_graph_* keys so the r9/r10 drift class
+    cannot recur — and the edge layer's declared payer is one of
+    them."""
     import re
-    import sys
-    from pathlib import Path
 
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    import bench
     from sparkstreamingtohdfsofsensorsdata_spark.operators import graph
+
+    family = {k for k in registry.load_all() if k.startswith("q_graph_")}
+    assert shared.DECLARED["graph.edges"].payer in family
 
     doc = graph.copurchase_edges.__doc__
     m = re.search(r"graph kernels \(([^)]*?)\s*—", doc, re.S)
     assert m, "docstring lost its kernel enumeration"
     names = re.findall(r"[a-z][a-z-]+", m.group(1))
-    assert {"q_graph_" + n.replace("-", "_") for n in names} == set(
-        bench.GRAPH_FAMILY
-    )
+    assert {"q_graph_" + n.replace("-", "_") for n in names} == family
     count_word = re.search(r"all (\w+) graph kernels", doc).group(1)
     words = {7: "seven", 8: "eight", 9: "nine", 10: "ten",
              11: "eleven", 12: "twelve"}
-    assert count_word == words[len(bench.GRAPH_FAMILY)]
+    assert count_word == words[len(family)]
 
 
-def test_graph_shared_layer_memos(spark):
-    """r13 CPU diet (+ r14 adjacency arrays): the five shared graph
-    intermediates (symmetric adjacency, degree table, adjacency
-    arrays, closed-triangle corners, CC labels) are each built ONCE
-    per (session, sf) — the second call returns the same object — and
-    the clear functions re-arm their whole layer (edges clear drops
-    sym+degree+arrays too: serving them warm over a cold edge table
-    would split bench attribution)."""
-    from sparkstreamingtohdfsofsensorsdata_spark.operators import graph
+def test_declarations_are_consistent():
+    """Every declared read names a declared intermediate, every payer
+    is a registered key, and payers() puts each payer after the payers
+    of everything its intermediates read — so an upfront prepay in
+    that order never builds one payer's intermediate under another's
+    charge."""
+    allk = set(registry.load_all())
+    assert set(PAYERS) <= allk
+    assert "q_agg_heavy_hitters" in PAYERS
+    pos = {p: i for i, p in enumerate(PAYERS)}
+    for decl in shared.DECLARED.values():
+        for dep in decl.reads:
+            assert dep in shared.DECLARED, (decl.name, dep)
+            assert pos[shared.DECLARED[dep].payer] <= pos[decl.payer]
 
-    sf = "/root/testdata/sf0.001"
-    graph.clear_edges_memo(spark)
-    graph.clear_orientation_memo(spark)
-    graph.clear_cc_memo(spark)
-    assert not graph.edges_warm(spark, sf)
-    sym = graph.sym_edges(spark, sf)
-    deg = graph.degree_table(spark, sf)
-    adj = graph.adj_arrays(spark, sf)
-    assert graph.edges_warm(spark, sf)
-    assert graph.sym_edges(spark, sf) is sym
-    assert graph.degree_table(spark, sf) is deg
-    assert graph.adj_arrays(spark, sf) is adj
-    labels = graph.cc_labels_graph(spark, sf)
-    assert graph.cc_warm(spark, sf)
-    assert graph.cc_labels_graph(spark, sf) is labels
-    # clearing the edge layer drops all three edge-layer memos
-    graph.clear_edges_memo(spark)
-    assert not graph.edges_warm(spark, sf)
-    # the CC memo has its own payer and its own clear
-    assert graph.cc_warm(spark, sf)
-    graph.clear_cc_memo(spark)
-    assert not graph.cc_warm(spark, sf)
+
+@pytest.fixture(scope="module")
+def all_payers_warm(spark):
+    """Every declared payer prepaid once at SF_A on an emptied store,
+    so SF_B holds nothing and each payer case starts from a full set."""
+    shared.clear_all(spark)
+    for payer in PAYERS:
+        shared.prepay(spark, SF_A, payer)
+    yield spark
+    shared.clear_all(spark)
+
+
+@pytest.mark.parametrize("payer", PAYERS)
+def test_declared_payer_lifecycle(all_payers_warm, payer):
+    """Per declared payer: clearing it drops exactly its intermediates
+    and leaves every other payer warm; it stays cold until ALL its
+    intermediates exist (a partial build — e.g. the triangle probe
+    without the folded counts — is not warm); prepay warms it; each
+    intermediate is one object per (session, sf_dir), so heavy hitters
+    reuse one broadcast; warmth is fingerprint-exact, so another sf_dir
+    stays cold however full the store is."""
+    spark = all_payers_warm
+    others = [p for p in PAYERS if p != payer]
+    owned = [n for n, d in shared.DECLARED.items() if d.payer == payer]
+    assert shared.warm(spark, SF_A, payer)
+
+    shared.clear(spark, payer)
+    assert not shared.warm(spark, SF_A, payer)
+    assert all(shared.warm(spark, SF_A, p) for p in others)
+    if len(owned) > 1:
+        shared.DECLARED[owned[0]].get(spark, SF_A)
+        assert not shared.warm(spark, SF_A, payer)
+
+    shared.prepay(spark, SF_A, payer)
+    assert shared.warm(spark, SF_A, payer)
+    for name in owned:
+        get = shared.DECLARED[name].get
+        assert get(spark, SF_A) is get(spark, SF_A), name
+    assert not shared.warm(spark, SF_B, payer)
 
 
 def test_survey_s2_is_one_to_one_with_registry():

@@ -1425,12 +1425,12 @@ def test_triangle_corners_are_array_intersection(spark):
     the plan must show array_intersect feeding a Generate, and no
     third self-join of the oriented edge list (two joins annotate the
     arrays; the old closing wedge join is gone)."""
+    from sparkstreamingtohdfsofsensorsdata_spark import shared
     from sparkstreamingtohdfsofsensorsdata_spark.operators.graph import (
-        clear_orientation_memo,
         triangle_node_counts,
     )
 
-    clear_orientation_memo(spark)
+    shared.clear(spark, "q_graph_triangles")
     # inspect the UNCHECKPOINTED build plan by reproducing it pre-memo:
     # the memoized handle is a LogicalRDD that hides the build
     df = triangle_node_counts(spark, SF)
