@@ -8,174 +8,33 @@ Each query is forced end-to-end with a noop-format write so the full
 physical plan executes (scan -> shuffle -> sink) without driver-side
 collect skew; streaming queries already materialize inside their query
 function, so their timing covers the streamed execution itself.
+
+Per-key cost comes from ``measure``: every key runs as one phase of
+perfbench's ``Tracer`` (``perfbench/tracing.py``), whose ledger groups
+the Spark jobs of the run by phase once, after the last key. One pass
+is one sample; repeated-run spread is perfbench's job (seeded,
+interleaved repeats), not this harness's.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import platform
 import sys
 import time
-import urllib.request
 
 import pandas as pd
 
 from sparkstreamingtohdfsofsensorsdata_spark import shared
 from sparkstreamingtohdfsofsensorsdata_spark.registry import load_all
-from sparkstreamingtohdfsofsensorsdata_spark.session import build_session
+from sparkstreamingtohdfsofsensorsdata_spark.session import (
+    build_session,
+    default_parallelism,
+)
 
-
-class _CpuMeter:
-    """Cumulative executor-CPU-time sampler (VERDICT r11 item 7).
-
-    Wall-clock on this host swings 2-3x with external load, which is why
-    58 floors had to be min-merged across three serialized r11 runs.
-    Executor CPU time (sum of task ``executorCpuTime`` over stages) is
-    the contention-immune cost of a plan: a key whose wall spiked but
-    whose CPU sits at its committed floor is host contention by
-    construction, and a key whose CPU grew is a real plan regression no
-    quiet-host rerun will hide.
-
-    Sampling rides the status REST API (one HTTP GET per key boundary,
-    ~0.1 s, OUTSIDE every timed region) because py4j iteration over
-    AppStatusStore's stage list costs 3 JVM round trips per stage.
-    Accounting is monotone per (stageId, attemptId) so UI stage
-    eviction can only under-count a stage once, never double-count or
-    go backwards. Python-UDF worker CPU is NOT included (the JVM idles
-    while Arrow batches are in Python) — cpu_s is the JVM-side cost,
-    which is the right basis for floors because it is what the plan
-    shape controls. Every failure degrades to ``enabled=False`` —
-    metering must never sink a bench run."""
-
-    def __init__(self, spark) -> None:
-        self._seen: dict[tuple[int, int], int] = {}
-        self._total_ns = 0
-        self._url = None
-        try:
-            sc = spark.sparkContext
-            base = sc.uiWebUrl
-            if base:
-                self._url = (
-                    f"{base}/api/v1/applications/{sc.applicationId}"
-                    "/stages?status=complete"
-                )
-        except Exception:
-            self._url = None
-        self.enabled = self._url is not None
-
-    def _poll(self) -> float:
-        with urllib.request.urlopen(self._url, timeout=15) as resp:
-            stages = json.load(resp)
-        for st in stages:
-            key = (st["stageId"], st["attemptId"])
-            cpu = int(st.get("executorCpuTime", 0))
-            prev = self._seen.get(key, 0)
-            if cpu > prev:
-                self._total_ns += cpu - prev
-                self._seen[key] = cpu
-        return self._total_ns / 1e9
-
-    def sample(self) -> float | None:
-        """Advance the monotone counter; return cumulative CPU seconds.
-
-        Settles before returning (r13, VERDICT r12 item 2): the status
-        store is fed by the async listener bus, so stages of an action
-        that JUST returned can land milliseconds after the first poll —
-        under monotone accounting their CPU would then be charged to
-        the NEXT key's window (the suspected mechanism behind r12's
-        q_graph_local_clustering 1.92x-CPU-floor overage: a shared-memo
-        build's tail attributed to whichever consumer ran next).
-        Re-poll (0.12 s apart, outside every timed region) until TWO
-        consecutive polls agree, with a 1.0 s hard cap (ADVICE r13: the
-        fixed 2-retry loop still leaked listener-bus lag > ~0.24 s into
-        the next key's window on a loaded host; requiring two stable
-        polls under a time cap bounds the bleed without unbounded
-        waiting)."""
-        if not self.enabled:
-            return None
-        try:
-            total = self._poll()
-            stable = 0
-            deadline = time.perf_counter() + 1.0
-            while stable < 1 and time.perf_counter() < deadline:
-                time.sleep(0.12)
-                nxt = self._poll()
-                if nxt - total < 1e-3:
-                    stable += 1
-                else:
-                    stable = 0
-                total = nxt
-            return total
-        except Exception as exc:  # pragma: no cover - meter must not sink bench
-            print(f"bench: cpu meter disabled: {exc}", file=sys.stderr)
-            self.enabled = False
-            return None
-
-
-class _PyCpuMeter:
-    """Python-worker CPU sampler (VERDICT r16 item 3): r16 moved the
-    hottest per-row work (simhash/minhash folds) from interpreted JVM
-    expressions into Arrow kernels, which the JVM-side `_CpuMeter`
-    cannot see — the JVM idles while batches are in Python, so a
-    regression inside a kernel would be invisible to the CPU-floor
-    audit. This meter reads /proc for the pyspark daemon/worker
-    processes (local mode: children of the driver JVM) and sums their
-    utime+stime, monotone per PID so a worker's CPU is never counted
-    twice and survives the worker's death at its last-sampled value
-    (workers are reused for the whole bench by default, so mid-key
-    deaths — the only loss window — are rare). Sampled at the same key
-    boundaries as the JVM meter, OUTSIDE every timed region; each poll
-    is one /proc scan (~2 ms). Every failure degrades to
-    ``enabled=False`` — metering must never sink a bench run."""
-
-    def __init__(self) -> None:
-        self._seen: dict[int, int] = {}  # pid -> max (utime+stime) ticks
-        try:
-            self._tck = os.sysconf("SC_CLK_TCK") or 100
-        except (OSError, ValueError):  # pragma: no cover
-            self._tck = 100
-        self.enabled = os.path.isdir("/proc")
-
-    def sample(self) -> float | None:
-        """Advance the monotone per-PID counters; return cumulative
-        Python-worker CPU seconds."""
-        if not self.enabled:
-            return None
-        try:
-            for pid_dir in os.listdir("/proc"):
-                if not pid_dir.isdigit():
-                    continue
-                try:
-                    with open(f"/proc/{pid_dir}/cmdline", "rb") as fh:
-                        cmd = fh.read()
-                    if (
-                        b"pyspark.daemon" not in cmd
-                        and b"pyspark.worker" not in cmd
-                    ):
-                        continue
-                    # argv[0] must be a python executable: a shell whose
-                    # command STRING merely mentions the module (e.g. a
-                    # wrapper that launched this bench) must not be
-                    # counted as a worker
-                    argv0 = cmd.split(b"\0", 1)[0]
-                    if b"python" not in os.path.basename(argv0):
-                        continue
-                    with open(f"/proc/{pid_dir}/stat") as fh:
-                        st = fh.read()
-                    # fields after the ")" that closes comm: state ppid
-                    # ... utime is field 14 overall = index 11 here
-                    fields = st[st.rindex(")") + 2 :].split()
-                    ticks = int(fields[11]) + int(fields[12])
-                    pid = int(pid_dir)
-                    if ticks > self._seen.get(pid, 0):
-                        self._seen[pid] = ticks
-                except (OSError, ValueError, IndexError):
-                    continue  # process raced away mid-read
-            return sum(self._seen.values()) / self._tck
-        except Exception as exc:  # pragma: no cover - meter must not sink bench
-            print(f"bench: py cpu meter disabled: {exc}", file=sys.stderr)
-            self.enabled = False
-            return None
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+from tracing import UI_CONF, Tracer  # noqa: E402
 
 
 def _warmup(spark, sf_dir: str) -> None:
@@ -233,23 +92,157 @@ def _load_1m() -> float:
         return -1.0
 
 
-def _delta(before: float | None, after: float | None) -> float | None:
-    """Meter reading between two samples; None if either failed."""
-    if before is None or after is None:
-        return None
-    return round(after - before, 3)
+def measure(spark, sf_dir: str, keys: list[str]) -> dict[str, dict]:
+    """Time ``keys`` in one session: ``{label: {wall_s, cpu_s, py_cpu_s,
+    load_1m, ok}}``, in run order.
+
+    After the warm-up, each declared payer among ``keys`` builds its
+    shared intermediates upfront as the phase ``<prepay KEY>`` (in
+    ``shared.payers()`` order), so every key then runs against warm
+    intermediates whatever order it comes in; then each key runs
+    (``spec.fn`` plus a noop write) as a phase of its own.
+
+    Every phase runs between ``Tracer.begin`` and ``Tracer.end``, and
+    the ledger is collected once, at the end, so nothing is polled or
+    settled between phases:
+
+    - ``cpu_s`` is the executor CPU of the phase's jobs (the ledger's
+      ``exec_cpu_s``), None if the ledger has none for it;
+    - ``py_cpu_s`` is the CPU of this process's own Python workers over
+      the phase (``py_worker_cpu_s``, keyed on ``(pid, starttime)``).
+
+    A failing phase reads ``ok=False`` and never sinks the run. The
+    ledger places a job by its tag, or else by the phase it was
+    submitted in. Call this once per session, before the session's
+    first Python task: the tracer counts a Python worker only if it
+    first sees it after the tracer is made, which is why the warm-up
+    runs in here."""
+    specs = load_all()
+    tracer = Tracer(spark)
+    ops: list[dict] = []
+
+    def phase(label: str, fn) -> None:
+        rec = {"key": label, "ok": True, "load_1m": _load_1m()}
+        tracer.begin(label)
+        rec["start"] = time.time()
+        t0 = time.perf_counter()
+        try:
+            fn()
+        except Exception as exc:  # a failing phase must not sink the run
+            print(f"bench: {label} FAILED: {exc}", file=sys.stderr)
+            rec["ok"] = False
+        rec["wall_s"] = time.perf_counter() - t0
+        rec["end"] = time.time()
+        tracer.end(label, rec)
+        ops.append(rec)
+        # Session hygiene between phases, outside the timed region: drop
+        # cached blocks left behind by ml-LSH models / memory sinks so
+        # phase N's storage does not shrink phase N+1's execution memory.
+        spark.catalog.clearCache()
+
+    def run_key(spec) -> None:
+        spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    try:
+        _warmup(spark, sf_dir)
+        for payer in shared.payers():
+            if payer in keys:
+                phase(f"<prepay {payer}>", lambda p=payer: shared.prepay(spark, sf_dir, p))
+        for key in keys:
+            phase(key, lambda s=specs[key]: run_key(s))
+        try:
+            ledger = tracer.collect(ops)["ledger"]
+        except Exception as exc:  # metering must never sink a run
+            print(f"bench: tag ledger unavailable: {exc}", file=sys.stderr)
+            ledger = {}
+    finally:
+        tracer.close()
+    return _records(ops, ledger)
 
 
-def _run_one(spec, spark, sf_dir: str) -> float:
-    start = time.perf_counter()
-    df = spec.fn(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    elapsed = time.perf_counter() - start
-    # Session hygiene between queries, outside the timed region: drop
-    # cached blocks left behind by ml-LSH models / memory sinks so query
-    # N's storage does not shrink query N+1's execution memory.
-    spark.catalog.clearCache()
-    return elapsed
+def _records(ops: list[dict], ledger: dict) -> dict[str, dict]:
+    """``measure``'s result from the tracer's ops and tag ledger."""
+    out = {}
+    for op in ops:
+        cpu = ledger.get(op["key"], {}).get("exec_cpu_s")
+        out[op["key"]] = {
+            "ok": op["ok"],
+            "wall_s": round(op["wall_s"], 3),
+            "cpu_s": None if cpu is None else round(cpu, 3),
+            "py_cpu_s": round(op["py_worker_cpu_s"], 3),
+            "load_1m": op["load_1m"],
+        }
+    return out
+
+
+def _assemble(records: dict[str, dict]) -> dict:
+    """bench_last.json's per-key maps from ``measure``'s records.
+
+    - A failed key reads -1.0 and has no CPU or load entry; a key the
+      ledger has no CPU for has no ``cpu_s`` entry (never a 0).
+    - Each successful ``<prepay KEY>`` phase is listed in
+      ``memo_payments`` and charged back into its payer's slot, since
+      the build is the payer's own computation. If the payer's query
+      itself failed, the build is reported as unreported instead of
+      silently shrinking the total. A failed prepay leaves the build to
+      whichever consumer runs first, which pays it inside its own run.
+    """
+    timings: dict[str, float] = {}
+    cpus: dict[str, float] = {}
+    py_cpus: dict[str, float] = {}
+    loads: dict[str, float] = {}
+    prepays: list[tuple[str, dict]] = []
+    for name, rec in records.items():
+        if name.startswith("<prepay "):
+            prepays.append((name.removeprefix("<prepay ").removesuffix(">"), rec))
+            continue
+        if not rec["ok"]:
+            timings[name] = -1.0
+            continue
+        timings[name] = rec["wall_s"]
+        loads[name] = rec["load_1m"]
+        py_cpus[name] = rec["py_cpu_s"]
+        if rec["cpu_s"] is not None:
+            cpus[name] = rec["cpu_s"]
+    memo_payments: list[dict] = []
+    for payer, rec in prepays:
+        if not rec["ok"]:
+            continue
+        memo_payments.append({
+            "payer": payer,
+            "trigger": "<upfront>",
+            "wall_s": rec["wall_s"],
+            "cpu_s": rec["cpu_s"],
+            "py_cpu_s": rec["py_cpu_s"],
+        })
+        if timings.get(payer, -1.0) < 0:
+            print(
+                f"bench: {rec['wall_s']:.3f}s of prepaid intermediate build is "
+                f"unreported ({payer} failed)",
+                file=sys.stderr,
+            )
+            continue
+        timings[payer] = round(timings[payer] + rec["wall_s"], 3)
+        py_cpus[payer] = round(py_cpus[payer] + rec["py_cpu_s"], 3)
+        if rec["cpu_s"] is not None and payer in cpus:
+            cpus[payer] = round(cpus[payer] + rec["cpu_s"], 3)
+    return {"queries": timings, "cpu_s": cpus, "py_cpu_s": py_cpus,
+            "load_1m": loads, "memo_payments": memo_payments}
+
+
+def _host(spark) -> dict:
+    """The host this run measured: numbers compare only within one."""
+    jvm = spark.sparkContext._jvm
+    return {
+        # what `nproc` prints (cpuset/affinity-aware), the usual source
+        # of $SPARK_GRAFT_CPUS, and the local[N] the session really ran
+        "cores_usable": len(os.sched_getaffinity(0)),
+        "local_cores": default_parallelism(),
+        "ram_gb": round(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30, 1),
+        "python": platform.python_version(),
+        "spark": spark.version,
+        "java": jvm.java.lang.System.getProperty("java.version"),
+    }
 
 
 _STDOUT_BUDGET = 1800  # bytes; observed harness tail window is 2000
@@ -298,13 +291,11 @@ def _stdout_line(payload: dict) -> dict:
             "unit": payload["unit"],
             "sf": payload["sf"],
             # host-contention headline: median/max 1-min load across the
-            # run + how many keys were floor-adjudicated by rerun; the
-            # per-key detail lives in bench_last.json (load_1m/rerun_s)
+            # run; the per-key detail lives in bench_last.json (load_1m)
             "load_med": lvals[len(lvals) // 2] if lvals else None,
             "load_max": lvals[-1] if lvals else None,
-            "n_rerun": len(payload.get("rerun_s", {})),
             # contention-immune companion to `value`: total executor
-            # CPU s of the kept runs (per-key map in bench_last.json)
+            # CPU s (per-key map in bench_last.json)
             "cpu_total": payload.get("cpu_total"),
             # Python-worker CPU s (Arrow kernels; per-key map in
             # bench_last.json py_cpu_s) — r17, VERDICT r16 item 3
@@ -455,253 +446,51 @@ def main() -> None:
         # A non-sf<N> directory name is a valid bench target; a dead
         # bench over an unparseable LABEL is not. Null it and run.
         sf = None
-    # UI on for bench only: the status REST endpoint is what the CPU
-    # meter samples (one GET per key boundary, outside timed regions).
-    # retainedStages is raised so 267 keys' stages never evict
-    # mid-run; the suite/sweep sessions keep the UI off as before.
-    spark = build_session(
-        app_name="bench",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "0",
-            "spark.ui.retainedStages": "40000",
-            "spark.ui.retainedJobs": "40000",
-        },
-    )
-
-    _warmup(spark, sf_dir)
-    meter = _CpuMeter(spark)
-    cursor = meter.sample()  # cumulative CPU after warmup = key-0 baseline
-    pymeter = _PyCpuMeter()
-    py_cursor = pymeter.sample()  # Python-worker CPU after warmup
-    specs = load_all()
-    timings: dict[str, float] = {}
-    cpus: dict[str, float] = {}  # executor CPU s of the KEPT run
-    py_cpus: dict[str, float] = {}  # Python-worker CPU s of the KEPT run
-    loads: dict[str, float] = {}  # 1-min load when the key's KEPT run started
-    reruns: dict[str, float] = {}  # rerun wall-clock for adjudicated keys
-    # Audit trail (VERDICT r12 item 2): every shared-intermediate
-    # prepay this run executed — the payer key it was charged to, the
-    # trigger ("<upfront>": the pinned block below), wall, executor CPU
-    # and Python-worker CPU. Lands in bench_last.json.
-    memo_payments: list[dict] = []
-
-    # Pin every shared intermediate (shared.py) to its declared payer
-    # BEFORE any key's timer starts: build each payer's intermediates
-    # now, in dependency order, and charge the cost to the payer's slot
-    # below. The main loop then times every key against warm
-    # intermediates whatever order the registry runs them in. A failed
-    # prepay leaves the build to whichever consumer runs first, which
-    # then pays it inside its own timed run — the honest attribution
-    # when the shared build is broken.
-    for payer in shared.payers():
-        start = time.perf_counter()
-        try:
-            shared.prepay(spark, sf_dir, payer)
-        except Exception as exc:
-            print(f"bench: upfront prepay for {payer} failed: {exc}", file=sys.stderr)
-            cursor = meter.sample()  # don't charge the wreckage downstream
-            py_cursor = pymeter.sample()
-            continue
-        wall = time.perf_counter() - start
-        after, py_after = meter.sample(), pymeter.sample()
-        memo_payments.append(
-            {
-                "payer": payer,
-                "trigger": "<upfront>",
-                "wall_s": round(wall, 3),
-                "cpu_s": _delta(cursor, after),
-                "py_cpu_s": _delta(py_cursor, py_after),
-            }
-        )
-        cursor, py_cursor = after, py_after
-
-    for name, spec in specs.items():
-        try:
-            # record the load locally and commit it only on success —
-            # loads[] documents the load when the key's KEPT run
-            # started, so a FAILED run must not leave an entry behind
-            # (ADVICE r9: failed keys polluted load_med/load_max)
-            load_at_start = _load_1m()
-            timings[name] = round(_run_one(spec, spark, sf_dir), 3)
-            loads[name] = load_at_start
-            after = meter.sample()
-            if cursor is not None and after is not None:
-                cpus[name] = round(after - cursor, 3)
-            cursor = after
-            py_after = pymeter.sample()
-            if py_cursor is not None and py_after is not None:
-                py_cpus[name] = round(py_after - py_cursor, 3)
-            py_cursor = py_after
-        except Exception as exc:  # a failing query must not sink the run
-            print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
-            timings[name] = -1.0
-            cursor = meter.sample()  # don't charge the wreckage downstream
-            py_cursor = pymeter.sample()
-    for pay in memo_payments:
-        payer = pay["payer"]
-        if timings.get(payer, -1.0) < 0:
-            # The build cost was really paid but its payer's own query
-            # failed; say so instead of silently shrinking the total.
-            print(
-                f"bench: {pay['wall_s']:.3f}s of prepaid intermediate build is "
-                f"unreported ({payer} failed)",
-                file=sys.stderr,
-            )
-            continue
-        timings[payer] = round(timings[payer] + pay["wall_s"], 3)
-        if pay["cpu_s"] is not None and payer in cpus:
-            cpus[payer] = round(cpus[payer] + pay["cpu_s"], 3)
-        if pay["py_cpu_s"] is not None and payer in py_cpus:
-            py_cpus[payer] = round(py_cpus[payer] + pay["py_cpu_s"], 3)
-
-    # This host's CPU budget swings ~10x on a multi-second cadence
-    # (measured: 81..890 fixed-size GEMMs per 5s window), so a single
-    # pass charges random queries for host stalls. Re-run the
-    # stall-suspect outliers once and keep the min — the steady-state
-    # cost of the plan, which is what the number is meant to convey.
-    # Suspects: absolute outliers (> max(3s, 4x median)) plus any key
-    # that regressed > 1.8x against the committed per-key floor
-    # (bench_floor.json) — the floor names the steady-state cost a
-    # previous run proved achievable, so exceeding it flags a stall
-    # even when the absolute time is small.
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(here, "bench_floor.json")) as fh:
-            floor = json.load(fh)
-    except (OSError, ValueError):
-        floor = {}
-    # CPU floors (VERDICT r11 item 7): committed per-key executor-CPU
-    # floors, contention-immune by construction — a key over its CPU
-    # floor regressed its PLAN (or its data), not its host, so it is a
-    # rerun suspect even when wall-clock happens to look fine.
-    try:
-        with open(os.path.join(here, "bench_floor_cpu.json")) as fh:
-            floor_cpu = json.load(fh)
-    except (OSError, ValueError):
-        floor_cpu = {}
-    ok = sorted(t for t in timings.values() if t >= 0)
-    deadline = time.perf_counter() + 150  # bound the rerun phase
-    if ok:
-        median = ok[len(ok) // 2]
-        cutoff = max(3.0, 4 * median)
-        suspects = {n for n, t in timings.items() if t > cutoff}
-        # VERDICT r12 item 5: the ratio test alone drowns in sub-second
-        # keys whose aggressively min-merged floors make 0.2-0.7s of
-        # host noise look like a 3x regression (14 of 17 r12 flags were
-        # this). Require an ABSOLUTE overage too — half a second is
-        # far above scheduler jitter but far below any real plan
-        # regression on a multi-second key. CPU-floor logic below stays
-        # ratio-only by design (CPU is contention-immune).
-        suspects |= {
-            n
-            for n, t in timings.items()
-            if n in floor
-            and floor[n] > 0
-            and t > 1.8 * floor[n]
-            and t - floor[n] > 0.5
-        }
-        # VERDICT r13 item 3: q_stream_* keys pick up micro-batch /
-        # state-store BACKGROUND-thread CPU attributed to whichever
-        # streaming key owns the sampling window — run-to-run noise,
-        # not plan cost. For those keys require the WALL to also be
-        # off its floor (>1.3x) before a CPU overage counts: a
-        # streaming key whose wall sits at floor did not regress, no
-        # matter what the shared background threads charged it.
-        suspects |= {
-            n
-            for n, c in cpus.items()
-            if n in floor_cpu
-            and floor_cpu[n] > 0
-            and c > 1.8 * floor_cpu[n]
-            and (
-                not n.startswith("q_stream_")
-                # MISSING wall evidence must read as "not proven at
-                # floor" (ADVICE r14 + r15): the exemption's premise
-                # is a wall MEASURED and PROVEN at a KNOWN floor, so
-                # a key lacking either a wall timing or a wall floor
-                # cannot be exempted (the old 0.0 > 0.0 comparison
-                # silently exempted a CPU-floored key with no wall
-                # TIMING recorded).
-                or n not in timings
-                or n not in floor
-                or timings[n] > 1.3 * floor[n]
-            )
-        }
-        # Biggest absolute excess over the proven floor first: a 7s key
-        # 2s over floor outranks a 0.5s key 0.3s over, and the cheap
-        # tail of small noisy keys still fits before the deadline.
-        for name in sorted(
-            suspects, key=lambda n: -(timings[n] - floor.get(n, 0.0))
-        )[:32]:
-            if time.perf_counter() > deadline:
-                break
-            try:
-                # A payer's kept number includes its shared builds, so
-                # its rerun must start cold for exactly those builds:
-                # drop that payer's intermediates (a no-op for a key
-                # that pays for none) so min(first, rerun) compares two
-                # honest runs.
-                shared.clear(spark, name)
-                rerun_load = _load_1m()
-                rerun = round(_run_one(specs[name], spark, sf_dir), 3)
-                after, py_after = meter.sample(), pymeter.sample()
-                rerun_cpu = _delta(cursor, after)
-                rerun_py = _delta(py_cursor, py_after)
-                cursor, py_cursor = after, py_after
-                reruns[name] = rerun
-                if rerun < timings[name]:
-                    timings[name] = rerun
-                    loads[name] = rerun_load
-                    if rerun_cpu is not None:
-                        cpus[name] = rerun_cpu
-                    if rerun_py is not None:
-                        py_cpus[name] = rerun_py
-            except Exception as exc:
-                print(f"bench: {name} rerun FAILED: {exc}", file=sys.stderr)
-                cursor = meter.sample()
-                py_cursor = pymeter.sample()
+    # UI on for bench only: the tracer's ledger reads the status REST
+    # API once, after the last key; the suite/sweep sessions keep the
+    # UI off as before.
+    spark = build_session(app_name="bench", extra_conf=UI_CONF)
+    parts = _assemble(measure(spark, sf_dir, list(load_all())))
     canary = _stream_canary(spark, sf_dir)
+    host = _host(spark)
     spark.stop()
 
+    timings, cpus, py_cpus = parts["queries"], parts["cpu_s"], parts["py_cpu_s"]
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     payload = {
         "metric": "total_query_wall_clock",
         "value": total,
         "unit": "sec",
         "queries": timings,
-        # Executor CPU seconds of each key's KEPT run (VERDICT r11
-        # item 7): the contention-immune per-key cost. Floors over this
-        # live in bench_floor_cpu.json; the wall-clock floors stay the
-        # headline because they are what BASELINE.md's history is in.
+        # Executor CPU seconds of each key (VERDICT r11 item 7): the
+        # contention-immune per-key cost, from the tracer's ledger.
         "cpu_s": cpus,
         "cpu_total": round(sum(cpus.values()), 1) if cpus else None,
-        # Python-worker CPU seconds of each key's KEPT run (VERDICT r16
-        # item 3): the Arrow-kernel companion to cpu_s — work the JVM
-        # meter cannot see because the JVM idles while batches are in
-        # Python workers. Keys that never cross the Python boundary
-        # read ~0; the simhash/minhash/heavy-hitters keys must read
-        # nonzero or their kernels silently stopped being audited.
+        # Python-worker CPU seconds of each key (VERDICT r16 item 3):
+        # the Arrow-kernel companion to cpu_s — work the JVM ledger
+        # cannot see because the JVM idles while batches are in Python
+        # workers. Keys that never cross the Python boundary read ~0;
+        # the simhash/minhash/heavy-hitters keys must read nonzero or
+        # their kernels silently stopped being audited.
         "py_cpu_s": py_cpus,
         "py_cpu_total": round(sum(py_cpus.values()), 1) if py_cpus else None,
         "sf": sf,
-        # Contention adjudication record (VERDICT r8 item 3): `load_1m`
-        # is the 1-min load when each key's KEPT run started; `rerun_s`
-        # lists every adjudicated rerun's own wall-clock (the kept
-        # number is min(first, rerun)). A key whose first pass spiked
-        # under load>>32 and whose rerun landed at floor is host
-        # contention by construction — no manual paragraph needed.
-        "load_1m": loads,
-        "rerun_s": reruns,
+        # Contention record (VERDICT r8 item 3): the 1-min load when
+        # each key started.
+        "load_1m": parts["load_1m"],
         # Shared-memo build audit (VERDICT r12 item 2): which payer was
         # charged for each intermediate build, what triggered it
-        # ("<upfront>" = the pinned pre-loop block), and its wall/CPU.
-        "memo_payments": memo_payments,
+        # ("<upfront>" = the prepay phases before the first key), and
+        # its wall/CPU.
+        "memo_payments": parts["memo_payments"],
         # Streaming throughput canary (VERDICT r10 item 8): one
         # multi-micro-batch stateful pipeline per round, as rows/s —
         # streaming regressions show up as a trend across rounds, not
         # just as wall-clock noise inside individual q_stream_* keys.
         "stream_canary": canary,
+        # Cores, RAM and versions of the host: a number compares only
+        # with numbers from the same fingerprint.
+        "host": host,
     }
     # Persist the full map next to this script: harnesses that keep only
     # a tail of stdout truncated the per-query timings in round 2

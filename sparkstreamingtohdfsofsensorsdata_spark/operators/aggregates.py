@@ -1101,19 +1101,27 @@ def _mg_candidates_text(batches):
     )
 
 
+def _candidate_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pass 1: the union of every partition's Misra-Gries sketch,
+    deduplicated in the JVM. A true heavy hitter survives in most
+    partitions' sketches, so without the ``distinct`` the driver would
+    collect up to capacity x partitions rows; with it, one row per
+    distinct candidate."""
+    return (
+        _docs_stream(spark, sf_dir)
+        .mapInArrow(_mg_candidates_text, "gram string")
+        .distinct()
+    )
+
+
 @shared("heavy_hitters.candidates", payer="q_agg_heavy_hitters")
 def _heavy_hitter_candidates(spark: SparkSession, sf_dir: str):
     """Pass 1's candidate set as a Spark broadcast of sorted gram
-    strings: the union of every partition's Misra-Gries sketch,
-    collected once per (session, fixture). A shared intermediate with
-    the key itself as payer, so repeated calls in one session reuse ONE
-    broadcast instead of leaking a new one per call."""
-    cand_rows = (
-        _docs_stream(spark, sf_dir)
-        .mapInArrow(_mg_candidates_text, "gram string")
-        .collect()
-    )
-    return spark.sparkContext.broadcast(sorted({r.gram for r in cand_rows}))
+    strings, collected once per (session, fixture). A shared
+    intermediate with the key itself as payer, so repeated calls in one
+    session reuse ONE broadcast instead of leaking a new one per call."""
+    cand_rows = _candidate_grams(spark, sf_dir).collect()
+    return spark.sparkContext.broadcast(sorted(r.gram for r in cand_rows))
 
 
 @query(

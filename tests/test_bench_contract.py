@@ -119,3 +119,132 @@ def test_stdout_line_mass_failure_still_fits():
     assert out["queries_failed_total"] == 138
     line = json.dumps(out, separators=(",", ":"))
     assert len(line) <= bench._STDOUT_BUDGET
+
+
+# --- per-key assembly from the tracer's tag ledger (no Spark) ---------
+
+import datetime as dt  # noqa: E402
+
+import tracing  # noqa: E402  (perfbench/, put on sys.path by bench)
+
+T0 = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc).timestamp()
+
+
+class _FakeStreams:
+    def addListener(self, listener):
+        pass
+
+    def removeListener(self, listener):
+        pass
+
+
+class _FakeSpark:
+    class sparkContext:  # noqa: N801 - mirrors SparkSession's attribute
+        uiWebUrl = "http://ui.invalid"
+        applicationId = "app-0"
+
+    streams = _FakeStreams()
+
+
+def _stamp(offset_s: float) -> str:
+    when = dt.datetime.fromtimestamp(T0 + offset_s, dt.timezone.utc)
+    return when.strftime("%Y-%m-%dT%H:%M:%S.%f")[:-3] + "GMT"
+
+
+def _op(label, start, end, py_cpu, ok=True):
+    """One phase as measure() hands it to the tracer: start/end are
+    epoch seconds, the tracer's end() adds py_worker_cpu_s."""
+    return {"key": label, "ok": ok, "load_1m": 1.0, "start": T0 + start,
+            "end": T0 + end, "wall_s": end - start, "py_worker_cpu_s": py_cpu}
+
+
+def _ledger(monkeypatch, ops, jobs):
+    """Run perfbench's real Tracer.collect over synthetic REST payloads:
+    ``jobs`` is ``[(submit_offset_s, executor_cpu_s)]``, one stage each."""
+    rest = {
+        "/jobs": [
+            {"jobId": i, "submissionTime": _stamp(s), "completionTime": _stamp(s + 0.1),
+             "jobTags": [], "stageIds": [i]}
+            for i, (s, _cpu) in enumerate(jobs)
+        ],
+        "/stages": [
+            {"stageId": i, "attemptId": 0, "status": "COMPLETE", "numCompleteTasks": 1,
+             "executorCpuTime": int(cpu * 1e9)}
+            for i, (_s, cpu) in enumerate(jobs)
+        ],
+    }
+    monkeypatch.setattr(tracing.Tracer, "_get", lambda self, path: rest[path])
+    monkeypatch.setattr(tracing.time, "sleep", lambda s: None)
+    tracer = tracing.Tracer(_FakeSpark())
+    try:
+        return tracer.collect(ops)["ledger"]
+    finally:
+        tracer.close()
+
+
+def _parts(monkeypatch, ops, jobs):
+    return bench._assemble(bench._records(ops, _ledger(monkeypatch, ops, jobs)))
+
+
+def test_prepay_folds_into_payer(monkeypatch):
+    ops = [
+        _op("<prepay q_p>", 0, 2, py_cpu=0.5),
+        _op("q_p", 3, 4, py_cpu=0.25),
+        _op("q_c", 5, 6, py_cpu=0.0),
+    ]
+    parts = _parts(monkeypatch, ops, [(1, 3.0), (3.5, 1.0), (5.5, 0.5)])
+    assert parts["queries"] == {"q_p": 3.0, "q_c": 1.0}
+    assert parts["cpu_s"] == {"q_p": 4.0, "q_c": 0.5}
+    assert parts["py_cpu_s"] == {"q_p": 0.75, "q_c": 0.0}
+    assert parts["memo_payments"] == [
+        {"payer": "q_p", "trigger": "<upfront>", "wall_s": 2.0, "cpu_s": 3.0,
+         "py_cpu_s": 0.5}
+    ]
+
+
+def test_failed_payer_leaves_prepay_unreported(monkeypatch, capsys):
+    ops = [
+        _op("<prepay q_p>", 0, 2, py_cpu=0.5),
+        _op("q_p", 3, 4, py_cpu=0.25, ok=False),
+        _op("q_c", 5, 6, py_cpu=0.0),
+    ]
+    parts = _parts(monkeypatch, ops, [(1, 3.0), (3.5, 1.0), (5.5, 0.5)])
+    # the failed payer reads -1 with no cost entries, and its prepay is
+    # neither added to it nor to the total
+    assert parts["queries"] == {"q_p": -1.0, "q_c": 1.0}
+    assert parts["cpu_s"] == {"q_c": 0.5}
+    assert parts["py_cpu_s"] == {"q_c": 0.0}
+    assert parts["load_1m"] == {"q_c": 1.0}
+    assert [p["payer"] for p in parts["memo_payments"]] == ["q_p"]
+    assert "2.000s of prepaid intermediate build is unreported (q_p failed)" in (
+        capsys.readouterr().err
+    )
+
+
+def test_failed_prepay_is_not_charged(monkeypatch):
+    ops = [
+        _op("<prepay q_p>", 0, 2, py_cpu=0.5, ok=False),
+        _op("q_p", 3, 4, py_cpu=0.25),
+    ]
+    parts = _parts(monkeypatch, ops, [(1, 3.0), (3.5, 1.0)])
+    assert parts["queries"] == {"q_p": 1.0}
+    assert parts["cpu_s"] == {"q_p": 1.0}
+    assert parts["memo_payments"] == []
+
+
+def test_key_without_ledger_cpu_has_no_cpu_entry(monkeypatch):
+    # q_c submitted no job inside its interval: the ledger holds no
+    # executor CPU for it, which must read as missing, not as 0
+    ops = [_op("q_b", 0, 1, py_cpu=0.1), _op("q_c", 2, 3, py_cpu=0.2)]
+    parts = _parts(monkeypatch, ops, [(0.5, 1.5)])
+    assert parts["queries"] == {"q_b": 1.0, "q_c": 1.0}
+    assert parts["cpu_s"] == {"q_b": 1.5}
+    assert parts["py_cpu_s"] == {"q_b": 0.1, "q_c": 0.2}
+    # and a ledger that could not be read at all leaves every key
+    # without a cpu_s entry
+    assert bench._assemble(bench._records(ops, {}))["cpu_s"] == {}
+
+
+def test_bench_session_uses_the_tracer_ui_conf():
+    assert bench.UI_CONF is tracing.UI_CONF
+    assert tracing.UI_CONF["spark.ui.enabled"] == "true"

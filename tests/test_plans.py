@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparkstreamingtohdfsofsensorsdata_spark import registry
+from sparkstreamingtohdfsofsensorsdata_spark.operators.aggregates import _candidate_grams
 from sparkstreamingtohdfsofsensorsdata_spark.plans import inspect
 from sparkstreamingtohdfsofsensorsdata_spark.tables import load
 
@@ -731,6 +732,18 @@ def test_heavy_hitters_recount_broadcasts_candidates(spark):
     assert "BroadcastHashJoin" not in text
     assert "xxhash64" not in text
     assert "Generate" not in text  # no explode of the gram stream
+
+
+def test_heavy_hitters_candidates_dedup_in_jvm(spark):
+    # Pass 1 deduplicates the per-partition sketches with a JVM-side
+    # aggregate before the driver collects them: the driver receives
+    # one row per distinct candidate, not capacity x partitions rows.
+    df = _candidate_grams(spark, SF)
+    text = inspect.plan_str(df)
+    assert "MapInArrow" in text
+    assert "HashAggregate(keys=[gram" in text
+    grams = [r.gram for r in df.collect()]
+    assert grams and len(grams) == len(set(grams))
 
 
 def test_skew_salted_two_stage_partials(spark):
