@@ -41,27 +41,19 @@ def _warmup(spark, sf_dir: str) -> None:
     """Start the JVM pipelines, the Python UDF workers, and the parquet
     reader before timing.
 
-    The first Python-UDF query in a session pays ~15s of worker spin-up
-    on local[32], and the first parquet scan pays footer/codec class
-    loading; both are session costs, not operator costs, so pay them
-    here once instead of inside whichever query runs first.
+    The identity pandas UDF runs one task per core, so every Python
+    worker is forked before the first key: per-key ``py_cpu_s`` then
+    reads kernel work, not worker start. The workers come warm (heavy
+    imports and the per-task fast path) from the ``fastdaemon`` that
+    ``build_session`` configures on a local master. The first parquet
+    scan pays footer/codec class loading. Both are session costs, not
+    operator costs, so pay them here once instead of inside whichever
+    query runs first.
     """
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def _identity(s: pd.Series) -> pd.Series:
-        # r17 (VERDICT r16 items 3+6): spawn AND fast-path every worker
-        # up front — numpy/pyarrow imports land here (the heavy-library
-        # init several kernels pay on their first key otherwise), and
-        # workerfast.activate() pins the per-task fixed costs (zip
-        # re-scan + full gc) down for the whole bench, so per-key
-        # py_cpu_s reads kernel work, not worker boot.
-        import numpy  # noqa: F401
-        import pyarrow  # noqa: F401
-
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
         return s
 
     n_par = spark.sparkContext.defaultParallelism

@@ -17,8 +17,8 @@ flags representation-fragile cells (signed zero / NaN / Decimal) per
 key even when both engines agree. Exact divergences report as
 ``exact-diff`` (distinct from hard FAIL) and the summary separates
 them; both fail the exit code. The r9 driver window failed on exactly
-the two cell classes only this mode can see, so round_close.py now
-requires a green exact sweep (sweep_exact_last.json) as well.
+the two cell classes only this mode can see, so a change is not done
+until the exact sweep is green too (sweep_exact_last.json).
 
 As of round 9 NO key needs skipping at any SF:
 the CC-cluster keys' old recursive-CTE transitive-closure oracle (which
@@ -149,9 +149,8 @@ def main() -> int:
         )
         summary["risky_keys"] = risky
     print(json.dumps(summary), flush=True)
-    # Persisted for scripts/round_close.py's freshness check: a round
-    # may not close without a green full-registry sweep newer than the
-    # last source change (and, since r10, a green EXACT sweep too).
+    # Persisted so the last sweep's verdict is auditable from the tree
+    # (sweep_exact_last.json for --exact, else sweep_last.json).
     fname = "sweep_exact_last.json" if exact else "sweep_last.json"
     out = os.path.join(os.path.dirname(__file__), "..", fname)
     with open(out, "w") as fh:

@@ -49,9 +49,6 @@ def q_udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     def charged(
         price: pd.Series, disc: pd.Series, tax: pd.Series
     ) -> pd.Series:
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
         return price * (1.0 - disc) * (1.0 + tax)
 
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 50 == 0)
@@ -110,9 +107,6 @@ def q_udf_row_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_udf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     @F.pandas_udf("double")
     def wavg(price: pd.Series, disc: pd.Series) -> float:
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
         # zero denominator -> NULL like the oracle's sum/sum (DuckDB
         # double x/0 is NULL); pandas 0.0/0.0 is NaN, which Arrow
         # ships as a NaN value, not a NULL (review r6)
@@ -145,9 +139,6 @@ def q_udf_iter_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pattern for loading a model/tokenizer in LLM scoring UDFs.
         import numpy as np
 
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
         coeff = 2.5  # stand-in for a loaded model's parameter
         for values in batches:
             yield pd.Series(np.log1p(values.abs()) * coeff)
@@ -225,9 +216,6 @@ def q_udf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     def zscore(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
         mean = pdf["o_totalprice"].mean()
         std = pdf["o_totalprice"].std(ddof=1)
         out = pdf[pdf["o_orderkey"] % 20 == 0]
@@ -272,9 +260,6 @@ def _arrow_transform(batches):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-    activate()
     for batch in batches:
         yield pa.RecordBatch.from_arrays(
             [
@@ -363,9 +348,6 @@ def q_udf_grouped_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
         cents = pc.cast(
             pc.floor(
                 pc.add(pc.multiply(table.column("p_retailprice"), 100.0), 0.5)

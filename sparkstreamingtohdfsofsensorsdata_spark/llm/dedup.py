@@ -238,9 +238,6 @@ def _minhash_sig_arrow(docs: DataFrame) -> DataFrame:
 
         import pyarrow as pa
 
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
         cache: dict = {}
 
         def chunks(sh: str):
@@ -510,9 +507,6 @@ def _simhash_arrow_fold(docs: DataFrame, wide: bool) -> DataFrame:
         import numpy as np
         import pyarrow as pa
 
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
         width = 128 if wide else 64
         pow64 = np.uint64(1) << np.arange(64, dtype=np.uint64)
         vocab: dict = {}
@@ -986,9 +980,6 @@ def _block_pair_topk(key, pdf, k: int):
     import numpy as np
     import pandas as pd
 
-    from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-    activate()
     ba, bb = key
     a = pdf[pdf["operand"] == 0]
     b = pdf[pdf["operand"] == 1]

@@ -72,9 +72,6 @@ def _extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
     """Deterministic stand-in for decode + feature extraction: byte
     length, first byte, and metadata-derived dimensions — all
     vectorized per Arrow batch."""
-    from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-    activate()
     for pdf in batches:
         payload = pdf["payload"]
         yield pd.DataFrame(
@@ -185,9 +182,6 @@ def _sample_frames(batches):
     (decode_video_frame) so the full plumbing is oracle-checkable."""
     import numpy as np
 
-    from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-    activate()
     for pdf in batches:
         if not len(pdf):
             continue
@@ -289,9 +283,6 @@ def _audio_windows(batches):
     the video-frame pattern at a different timebase."""
     import numpy as np
 
-    from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-    activate()
     for pdf in batches:
         if not len(pdf):
             continue

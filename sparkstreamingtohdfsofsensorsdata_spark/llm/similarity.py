@@ -247,9 +247,6 @@ def _buckets_udf():
 
     @pandas_udf("array<int>")
     def buckets(emb: pd.Series) -> pd.Series:
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
         if not len(emb):
             return pd.Series([], dtype=object)
         mat = np.vstack(emb.to_numpy())  # (batch, dim)
@@ -384,9 +381,6 @@ def _top_cells_udf(cent_rows, k: int):
 
     @pandas_udf("array<int>")
     def top_cells(e: pd.Series) -> pd.Series:
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
         if not len(e):
             return pd.Series([], dtype=object)
         mat = np.vstack(e.to_numpy())  # (batch, dim)
@@ -786,9 +780,6 @@ def _pq_codes_udf(books: np.ndarray):
 
     @pandas_udf("array<int>")
     def codes(e: pd.Series) -> pd.Series:
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
         if not len(e):
             return pd.Series([], dtype=object)
         mat = np.vstack(e.to_numpy()).reshape(len(e), m, dsub)
@@ -811,9 +802,6 @@ def _pq_qtab_udf(books: np.ndarray):
 
     @pandas_udf("array<double>")
     def qtab(e: pd.Series) -> pd.Series:
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
         if not len(e):
             return pd.Series([], dtype=object)
         mat = np.vstack(e.to_numpy()).reshape(len(e), m, dsub)

@@ -1083,9 +1083,6 @@ def _mg_candidates_text(batches):
     when over capacity."""
     import pyarrow as pa
 
-    from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-    activate()
     counters: dict[str, int] = {}
     for batch in batches:
         fresh: dict[str, int] = {}
@@ -1183,11 +1180,6 @@ def q_agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     def recount(batches):
         import pyarrow as pa
 
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import (
-            activate,
-        )
-
-        activate()
         want = frozenset(bc.value)
         counts: dict[str, int] = {}
         for batch in batches:

@@ -39,11 +39,14 @@ def scratch_dir(prefix: str = "scratch_") -> str:
 
 
 def default_parallelism() -> int:
-    """Local parallelism: honor the driver's SPARK_GRAFT_CPUS if set."""
+    """Local parallelism: honor the driver's SPARK_GRAFT_CPUS if set,
+    else the CPUs this process may run on (its affinity mask, as
+    ``nproc`` counts them), so a cpuset-limited container does not
+    oversubscribe ``local[N]`` with the host's full core count."""
     env = os.environ.get("SPARK_GRAFT_CPUS")
     if env:
         return int(env)
-    return os.cpu_count() or 8
+    return len(os.sched_getaffinity(0))
 
 
 _SHIPPED_APPS: set[str] = set()
@@ -224,14 +227,16 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
-    # Warm-fork Python daemon (r17, guide §4.5): workers are forked
-    # from a daemon that already imported numpy/pandas/pyarrow and
-    # applied workerfast.activate(), so respawned workers (the JVM
-    # reaps the idle pool after a hardcoded 1 minute) cost a bare fork
-    # instead of ~0.6 CPU-s of imports, and no task anywhere pays the
-    # per-task zip re-scan / full-gc fixed costs. Gated on a local
-    # master and on the module being importable by the worker
-    # processes — see _python_daemon_conf and fastdaemon.py.
+    # Warm-fork Python daemon (r17, guide §4.5), the engine's only
+    # worker fast path: workers are forked from a daemon that already
+    # imported numpy/pandas/pyarrow and the operator surface, stopped
+    # the per-task re-reads of its launch-path zips and froze the gc
+    # baseline, so respawned workers (the JVM reaps the idle pool after
+    # a hardcoded 1 minute) cost a bare fork instead of ~0.6 CPU-s of
+    # imports, and no task pays the per-task zip re-scan / full-gc
+    # fixed costs. Gated on a local master and on the module being
+    # importable by the worker processes — see _python_daemon_conf and
+    # fastdaemon.py. Any other session runs pyspark's stock worker.
     daemon_conf = _python_daemon_conf(master)
     for key, value in {**daemon_conf, **(extra_conf or {})}.items():
         builder = builder.config(key, value)

@@ -102,9 +102,6 @@ class EventsArrowReader(DataSourceReader):
     def read(self, partition):  # runs in the executor Python worker
         import pyarrow.parquet as pq
 
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
         cols = ["event_id", "user_id", "event_type", "value"]
         pf = pq.ParquetFile(self._path)
         if partition.row_group is not None:
@@ -249,9 +246,6 @@ class JsonlSinkWriter(DataSourceWriter):
         import os
         import uuid
 
-        from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-        activate()
         part = f"part-{uuid.uuid4().hex}.jsonl"
         tmp = os.path.join(self._path, f".{part}.tmp")
         n = 0

@@ -42,9 +42,6 @@ def _alert_fn(
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    from sparkstreamingtohdfsofsensorsdata_spark.workerfast import activate
-
-    activate()
     (user_id,) = key
     run = state.get[0] if state.exists else 0
     batches = [pdf for pdf in pdfs if len(pdf)]
@@ -127,11 +124,6 @@ def user_stats_tws(events):
 
     class UserStats(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
-            from sparkstreamingtohdfsofsensorsdata_spark.workerfast import (
-                activate,
-            )
-
-            activate()
             self._state = handle.getValueState("stats", "n LONG, mx DOUBLE")
 
         def handleInputRows(self, key, rows, timer_values):

@@ -153,9 +153,8 @@ def test_registry_window_is_the_stale_cohort():
     an unfiltered glob would flip the cohorts and turn this test red at
     every round-open (VERDICT r15 item 2). The pin keeps the suite
     green on a tree carrying newer artifacts; re-rotation at the NEXT
-    round is enforced by scripts/round_close.py's rotation gate
-    (ROTATION_ROUND must equal max artifact round + 1), not by a
-    standing red test."""
+    round is a manual step (ROTATION_ROUND = max artifact round + 1),
+    not a standing red test."""
     import glob
     import json
     import re
@@ -210,7 +209,7 @@ def test_registry_window_is_the_stale_cohort():
         f"artifacts < r{ROTATION_ROUND}; committed artifact rounds: "
         f"{sorted(seen_rounds)}). If a NEW CORRECTNESS artifact landed, "
         "re-rotate VERIFICATION_PRIORITY and bump ROTATION_ROUND in "
-        "registry.py - scripts/round_close.py gates on this."
+        "registry.py."
     )
     front = list(registry.load_all())[:50]
     assert front == expected[:50], policy_msg
