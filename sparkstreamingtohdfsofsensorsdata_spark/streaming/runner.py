@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import shutil
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,28 +35,108 @@ from ..session import scratch_dir
 STREAM_STATE_PARTITIONS = 8
 
 
-def _prepare_streaming_session(result: DataFrame) -> str:
-    """Per-query confs that must hold regardless of who built the session.
+# Spark's default checkpoint manager on any scheme is the
+# FileContext-based one. Without libhadoop (pyspark ships none), Hadoop's
+# local FileContext rename resolves the destination with a forked
+# `readlink` and every create forks a `chmod`: ~5 shell processes per
+# checkpoint file (offset WAL, commit log, source and sink logs, one
+# state delta per partition). A JFR probe of the sensor pipeline through
+# write_file_sink (Spark 4.1.2, 4-core host, 200k rows per call) counted
+# 156 forks per call (1224 `readlink` from FileContext.rename plus 306
+# `chmod` from create over 10 calls), and walCommit / commitOffsets /
+# latestOffset took ~28 ms each. The FileSystem-based manager renames
+# with java.io.File.renameTo, atomic on POSIX: 34 forks per call (only
+# the `chmod`s are left), those phases ~7 ms, the call's wall p50 0.80
+# -> 0.54 s at unchanged CPU per call. Only the `file` scheme gets it:
+# on HDFS (and object stores) only the FileContext rename-with-overwrite
+# is atomic, so hdfs://, s3a:// and any other scheme keep Spark's
+# default.
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
-    Checkpoint file checksums (Spark 4.1's ChecksumCheckpointFileManager)
-    share a bounded thread pool across queries; after a handful of
-    sequential streaming queries in one session its state-store writes
-    block indefinitely (observed: a 16s stream-stream join never
-    completing). Checkpoint durability does not depend on them — disable.
 
-    Also caps shuffle partitions at ``STREAM_STATE_PARTITIONS`` for the
-    duration of the streaming query (state-store sizing, above).
-    Returns the previous shuffle-partition setting so the caller can
-    restore it for subsequent batch plans."""
-    conf = result.sparkSession.conf
-    conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    prev = conf.get("spark.sql.shuffle.partitions")
+def _scheme(path: str) -> str | None:
+    """The scheme Hadoop's ``Path`` reads from ``path``: the text before
+    a ``:`` that precedes any ``/``; None for a bare path."""
+    head, colon, _ = path.partition(":")
+    return head.lower() if colon and head and "/" not in head else None
+
+
+def checkpoint_manager(paths, default_fs: str | None) -> str | None:
+    """The checkpoint manager class for a query writing to ``paths``:
+    the FileSystem-based one when every path resolves to the ``file``
+    scheme, else None (Spark's default). A bare path, and a None
+    checkpoint (Spark then picks a bare temporary dir), resolve against
+    ``default_fs`` (Hadoop's ``fs.defaultFS``; unset means ``file:///``)."""
+    fallback = _scheme(default_fs or "file:///")
+    if all(((p and _scheme(p)) or fallback) == "file" for p in paths):
+        return LOCAL_CHECKPOINT_MANAGER
+    return None
+
+
+@contextmanager
+def streaming_confs(spark: SparkSession, *paths: str | None):
+    """Per-query confs for one streaming query whose checkpoint and sink
+    live at ``paths``. Each is restored to its prior value (or unset) on
+    exit, also when ``start()`` raises: a leaked override would change
+    every later query in a long-lived session.
+
+    - Shuffle partitions are capped at ``STREAM_STATE_PARTITIONS``
+      (state-store sizing, above).
+    - Checkpoint file checksums (Spark 4.1's
+      ChecksumCheckpointFileManager) are off: they share a bounded
+      thread pool across queries, and after a handful of sequential
+      streaming queries in one session its state-store writes block
+      indefinitely (observed: a 16s stream-stream join never
+      completing). Checkpoint durability does not depend on them.
+    - Local paths get the FileSystem-based checkpoint manager (see
+      ``LOCAL_CHECKPOINT_MANAGER``)."""
+    conf = spark.conf
     try:
-        cap = min(STREAM_STATE_PARTITIONS, int(prev))
+        cap = min(
+            STREAM_STATE_PARTITIONS, int(conf.get("spark.sql.shuffle.partitions"))
+        )
     except (TypeError, ValueError):
         cap = STREAM_STATE_PARTITIONS
-    conf.set("spark.sql.shuffle.partitions", str(cap))
-    return prev
+    scoped = {
+        "spark.sql.shuffle.partitions": str(cap),
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
+    }
+    # The Hadoop conf the query will read: the session's SQL confs over
+    # the context's (a session-level fs.defaultFS counts).
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    manager = checkpoint_manager(paths, hadoop_conf.get("fs.defaultFS"))
+    if manager is not None:
+        scoped[CHECKPOINT_MANAGER_KEY] = manager
+    prior = {key: conf.get(key, None) for key in scoped}
+    try:
+        for key, value in scoped.items():
+            conf.set(key, value)
+        yield
+    finally:
+        for key, value in prior.items():
+            if value is None:
+                conf.unset(key)
+            else:
+                conf.set(key, value)
+
+
+def _run_available_now(writer, timeout_s: int, what: str) -> None:
+    """Start ``writer`` with ``trigger(availableNow=True)`` and wait for
+    it to finish. The query never outlives the call: a live one would
+    keep writing its sink and its checkpoint for the session's
+    lifetime."""
+    q = None
+    try:
+        q = writer.trigger(availableNow=True).start()
+        if not q.awaitTermination(timeout_s):
+            raise TimeoutError(f"{what} still running after {timeout_s}s")
+    finally:
+        if q is not None and q.isActive:
+            q.stop()
 
 
 def run_to_memory(
@@ -82,59 +163,38 @@ def run_to_memory(
     localCheckpointed DataFrame whose blocks the ContextCleaner
     releases once the caller is done with it.
     """
-    prev_parts = _prepare_streaming_session(result)
+    spark = result.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
     # Explicit tmpfs checkpoint: state-store commits are fsync-heavy and
     # this checkpoint is run-scoped (availableNow to completion), so RAM
     # is the right place — a restartable deployment would point this at
     # HDFS/S3 instead (write_file_sink does).
     ckpt = scratch_dir("ckpt_")
-    # start() itself can throw (unsupported plan/output-mode combo) —
-    # it must sit INSIDE the try, or the finally never restores the
-    # session's shuffle-partition override and the leak degrades every
-    # later batch query in a long-lived session.
-    q = None
     try:
-        try:
-            q = (
+        with streaming_confs(spark, ckpt):
+            writer = (
                 result.writeStream.outputMode(output_mode)
                 .format("memory")
                 .queryName(name)
                 .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
             )
-            finished = q.awaitTermination(timeout_s)
-            if not finished:
-                # A silently-partial memory table would surface later
-                # as a baffling parity mismatch — fail loudly at the
-                # source.
-                raise TimeoutError(
-                    f"streaming query {name!r} still running after "
-                    f"{timeout_s}s; refusing to return a partial memory "
-                    "table"
-                )
-        finally:
-            if q is not None and q.isActive:
-                q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
-            result.sparkSession.conf.set(
-                "spark.sql.shuffle.partitions", prev_parts
-            )
-        spark = result.sparkSession
-        sink = spark.table(name)
+            # A silently-partial memory table would surface later as a
+            # baffling parity mismatch — a timeout fails loudly at the
+            # source.
+            _run_available_now(writer, timeout_s, f"streaming query {name!r}")
         # Eager localCheckpoint decouples the result from the sink's
         # catalog entry JVM-side (no driver<->Python roundtrip), and
         # unlike the pinned temp view its blocks are released by the
         # ContextCleaner once the caller drops the returned DataFrame.
-        return sink.localCheckpoint(eager=True)
+        return spark.table(name).localCheckpoint(eager=True)
     finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
         # The drop runs on EVERY exit — a timeout/start failure used to
         # skip it and leave the partially-filled memory table pinned on
         # the driver heap for the session's lifetime, the exact leak
         # this function's docstring exists to prevent (review r6).
         # dropTempView on a never-registered name is a harmless False.
-        result.sparkSession.catalog.dropTempView(name)
+        spark.catalog.dropTempView(name)
 
 
 def write_file_sink(
@@ -151,25 +211,16 @@ def write_file_sink(
     a crashed batch never exposes partial output, and restarting with
     the same checkpoint resumes from committed offsets.
     """
-    prev_parts = _prepare_streaming_session(result)
-    q = None
-    try:
-        writer = (
-            result.writeStream.outputMode(output_mode)
-            .format("parquet")
-            .option("path", path)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-        )
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        q = writer.start()
-        if not q.awaitTermination(300):
-            raise TimeoutError("file-sink query still running after 300s")
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        result.sparkSession.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    writer = (
+        result.writeStream.outputMode(output_mode)
+        .format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", checkpoint)
+    )
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    with streaming_confs(result.sparkSession, checkpoint, path):
+        _run_available_now(writer, 300, "file-sink query")
 
 
 def run_foreach_batch(
@@ -187,23 +238,11 @@ def run_foreach_batch(
     epoch_id for an uncommitted batch — the property every idempotent
     foreachBatch commit protocol keys on. Without it the run is
     ephemeral (epoch ids restart at 0)."""
-    prev_parts = _prepare_streaming_session(result)
-    q = None
-    try:
-        writer = (
-            result.writeStream.outputMode(output_mode)
-            .foreachBatch(fn)
-            .trigger(availableNow=True)
-        )
-        if checkpoint is not None:
-            writer = writer.option("checkpointLocation", checkpoint)
-        q = writer.start()
-        if not q.awaitTermination(300):
-            raise TimeoutError("foreachBatch query still running after 300s")
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        result.sparkSession.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    writer = result.writeStream.outputMode(output_mode).foreachBatch(fn)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    with streaming_confs(result.sparkSession, checkpoint):
+        _run_available_now(writer, 300, "foreachBatch query")
 
 
 def add_event_date(events: DataFrame) -> DataFrame:

@@ -63,10 +63,20 @@ def test_stock_daemon_still_answers_kernel_key():
         "spark = build_session(master='local[2]', shuffle_partitions=2,\n"
         f"    extra_conf={{{DAEMON_KEY!r}: 'pyspark.daemon'}})\n"
         "run_parity(spark, make_duck_views(SF_DIR), 'q_llm_simhash', SF_DIR)\n"
+        # Only Python processes other than this driver: the JVM's
+        # --conf argument and this driver's own code string both name
+        # the daemon module too.
         "for pid, _cpu in descendants(os.getpid()).values():\n"
-        "    if is_python_worker(pid):\n"
+        "    try:\n"
         "        with open(f'/proc/{pid}/cmdline', 'rb') as fh:\n"
-        "            print(fh.read().replace(b'\\0', b' ').decode())\n"
+        "            argv = fh.read().split(b'\\0')\n"
+        "    except OSError:\n"
+        "        continue\n"
+        "    exe = os.path.basename(argv[0]).decode()\n"
+        "    if pid == os.getpid() or not exe.startswith('python'):\n"
+        "        continue\n"
+        "    if is_python_worker(pid):\n"
+        "        print(b' '.join(argv).decode())\n"
         "spark.stop()\n"
     )
     out = subprocess.run(

@@ -10,9 +10,16 @@ sound oracle).
 
 from __future__ import annotations
 
+import contextlib
 import os
+import signal
+import subprocess
+import sys
+import time
+from pathlib import Path
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from sparkstreamingtohdfsofsensorsdata_spark.sources.factory import (
@@ -21,8 +28,13 @@ from sparkstreamingtohdfsofsensorsdata_spark.sources.factory import (
 )
 from sparkstreamingtohdfsofsensorsdata_spark.streaming import ops
 from sparkstreamingtohdfsofsensorsdata_spark.streaming.runner import (
+    CHECKPOINT_MANAGER_KEY,
+    LOCAL_CHECKPOINT_MANAGER,
     add_event_date,
+    checkpoint_manager,
+    run_foreach_batch,
     run_to_memory,
+    streaming_confs,
     write_file_sink,
 )
 from sparkstreamingtohdfsofsensorsdata_spark.streaming.stateful import alert_fsm
@@ -132,34 +144,29 @@ def test_late_data_dropped_after_watermark(spark, tmp_path):
 def _run_with_ckpt(spark, df, ckpt: str, name: str, output_mode: str = "complete"):
     """Run an availableNow pass against a DURABLE checkpoint and return
     the memory-sink table (fresh table per pass; state/offsets resume
-    from the checkpoint)."""
-    from sparkstreamingtohdfsofsensorsdata_spark.streaming.runner import (
-        _prepare_streaming_session,
-    )
-
-    prev_parts = _prepare_streaming_session(df)
+    from the checkpoint). The pass runs under the production per-query
+    confs, so both passes use the local checkpoint manager."""
     q = None
     try:
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "streaming pass did not finish"
+        with streaming_confs(spark, ckpt):
+            q = (
+                df.writeStream.outputMode(output_mode)
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            assert q.awaitTermination(300), "streaming pass did not finish"
         return spark.table(name)
     finally:
         # A timed-out/failed pass must not leak a live query: it keeps
         # the durable checkpoint locked (the SECOND pass in the restart
         # tests reuses it) and keeps mutating the memory sink for the
         # session's lifetime — the exact trap test_canary documents
-        # (review r6). Restore the shuffle-partition override too, per
-        # _prepare_streaming_session's contract.
+        # (review r6).
         if q is not None and q.isActive:
             q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def test_windowed_agg_restart_recovery(spark, tmp_path):
@@ -191,12 +198,31 @@ def test_windowed_agg_restart_recovery(spark, tmp_path):
     assert _rows(t2, *cols) == _rows(ops.tumbling_counts(ev), *cols)
 
 
-def test_stream_stream_join_restart_recovery(spark, tmp_path):
+def _plain_file_sink(df, out: str, ckpt: str) -> None:
+    """An availableNow parquet sink through Spark's own writeStream, with
+    none of the runner's per-query confs: its checkpoint is written by
+    Spark's default checkpoint manager."""
+    q = (
+        df.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(300), "plain file-sink pass did not finish"
+    finally:
+        if q.isActive:
+            q.stop()
+
+
+def _join_restart_recovery(spark, tmp_path, first_pass) -> None:
     """Kill-and-resume for stream-stream join state, through the file
     sink (the memory sink refuses append-mode checkpoint recovery):
     pairs whose two sides arrive on opposite sides of the restart can
     only be emitted if the buffered side survived the checkpoint, and
-    the committed output must stay exactly-once."""
+    the committed output must stay exactly-once. ``first_pass`` writes
+    the checkpoint; ``write_file_sink`` resumes it."""
     ev = load(spark, SF_DIR, "events")
     first = ev.filter(F.col("event_id") % 2 == 0)
     second = ev.filter(F.col("event_id") % 2 == 1)
@@ -204,18 +230,16 @@ def test_stream_stream_join_restart_recovery(spark, tmp_path):
     src.mkdir()
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
 
-    def run_once():
-        write_file_sink(
-            ops.purchases_joined_views(stream_source(spark, str(src))), out, ckpt
-        )
+    def joined():
+        return ops.purchases_joined_views(stream_source(spark, str(src)))
 
     _write_chunk(first, str(src / "c0.parquet"))
-    run_once()
+    first_pass(joined(), out, ckpt)
     r1 = set(_rows(spark.read.parquet(out), "p_id", "v_id"))
 
     # "crash": only checkpoint + committed files survive; resume.
     _write_chunk(second, str(src / "c1.parquet"))
-    run_once()
+    write_file_sink(joined(), out, ckpt)
     final = spark.read.parquet(out)
     rall = set(_rows(final, "p_id", "v_id"))
 
@@ -226,6 +250,18 @@ def test_stream_stream_join_restart_recovery(spark, tmp_path):
     # the second half alone — its other side was recovered state.
     second_only = set(_rows(ops.purchases_joined_views(second), "p_id", "v_id"))
     assert (rall - r1) - second_only
+
+
+def test_stream_stream_join_restart_recovery(spark, tmp_path):
+    _join_restart_recovery(spark, tmp_path, write_file_sink)
+
+
+def test_default_manager_checkpoint_resumes_through_file_sink(spark, tmp_path):
+    """Both checkpoint managers write one layout (offset WAL, commit log,
+    source/sink logs, state deltas): a checkpoint that Spark's default
+    manager wrote, state included, resumes under the local manager."""
+    assert spark.conf.get(CHECKPOINT_MANAGER_KEY, None) is None
+    _join_restart_recovery(spark, tmp_path, _plain_file_sink)
 
 
 def test_update_mode_emits_changed_windows_only(spark, tmp_path):
@@ -242,10 +278,6 @@ def test_update_mode_emits_changed_windows_only(spark, tmp_path):
     agg = ops.tumbling_counts(
         stream_source(spark, str(src), max_files_per_trigger=1)
     )
-    from sparkstreamingtohdfsofsensorsdata_spark.streaming.runner import (
-        run_foreach_batch,
-    )
-
     epochs: list[tuple[int, list]] = []
     run_foreach_batch(
         agg,
@@ -392,6 +424,166 @@ def test_file_sink_exactly_once_resume(spark, tmp_path):
     assert back.select("event_id").distinct().count() == ev.count()
     # partitioned layout on disk
     assert any(p.startswith("event_date=") for p in os.listdir(out))
+
+
+@pytest.mark.parametrize(
+    "paths, default_fs, expected",
+    [
+        (("/tmp/ckpt",), "file:///", LOCAL_CHECKPOINT_MANAGER),
+        (("file:/x",), "file:///", LOCAL_CHECKPOINT_MANAGER),
+        (("file:///x", "/out"), None, LOCAL_CHECKPOINT_MANAGER),
+        (("hdfs://nn/x",), "file:///", None),
+        (("s3a://b/x",), "file:///", None),
+        (("/tmp/ckpt", "s3a://b/out"), "file:///", None),
+        (("/tmp/ckpt",), "hdfs://nn:8020", None),
+        (("file:/x",), "hdfs://nn:8020", LOCAL_CHECKPOINT_MANAGER),
+        ((None,), "file:///", LOCAL_CHECKPOINT_MANAGER),
+        ((None,), "hdfs://nn:8020", None),
+    ],
+)
+def test_checkpoint_manager_only_for_local_paths(paths, default_fs, expected):
+    # Only a path that resolves to the file scheme gets the FileSystem
+    # manager: on HDFS only Spark's default (FileContext) manager
+    # renames atomically. Bare paths and a None checkpoint resolve
+    # against the default FS.
+    assert checkpoint_manager(paths, default_fs) == expected
+
+
+def test_foreach_batch_runs_on_local_checkpoint_manager(spark, tmp_path):
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_chunk(spark.range(3).toDF("n"), str(src / "c0.parquet"))
+    seen = []
+    run_foreach_batch(
+        spark.readStream.schema("n long").parquet(str(src)),
+        lambda df, _eid: seen.append(
+            df.sparkSession.conf.get(CHECKPOINT_MANAGER_KEY, None)
+        ),
+        checkpoint=str(tmp_path / "ckpt"),
+    )
+    assert seen and set(seen) == {LOCAL_CHECKPOINT_MANAGER}
+
+
+def test_streaming_confs_restored_after_run_and_failed_start(spark, tmp_path):
+    """Every conf the per-query scope touches goes back to its prior
+    value — set or unset — after a run and after a start() that raises."""
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled",
+        CHECKPOINT_MANAGER_KEY,
+    )
+    fixture = {key: spark.conf.get(key, None) for key in keys}
+    # Priors the scope must override: above the partition cap, checksums
+    # on, and the manager class unset.
+    prior = dict(zip(keys, ("16", "true", None)))
+    try:
+        _set_confs(spark, prior)
+        src = tmp_path / "src"
+        src.mkdir()
+        _write_chunk(spark.range(3).toDF("n"), str(src / "c0.parquet"))
+        stream = spark.readStream.schema("n long").parquet(str(src))
+        out = str(tmp_path / "out")
+        write_file_sink(stream, out, str(tmp_path / "ckpt"))
+        assert spark.read.parquet(out).count() == 3
+        assert {key: spark.conf.get(key, None) for key in keys} == prior
+        # The file sink has no complete mode: start() itself raises.
+        with pytest.raises(AnalysisException, match="(?i)complete"):
+            write_file_sink(
+                stream, out, str(tmp_path / "ckpt2"), output_mode="complete"
+            )
+        assert {key: spark.conf.get(key, None) for key in keys} == prior
+    finally:
+        _set_confs(spark, fixture)
+
+
+def _set_confs(spark, confs: dict) -> None:
+    """Set each conf, unsetting those whose value is None."""
+    for key, value in confs.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
+
+
+_KILLED_SINK = """
+import sys
+from pyspark.sql import SparkSession
+from sparkstreamingtohdfsofsensorsdata_spark.sources.factory import stream_source
+from sparkstreamingtohdfsofsensorsdata_spark.streaming.runner import (
+    add_event_date,
+    write_file_sink,
+)
+src, out, ckpt = sys.argv[1:]
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.shuffle.partitions", "2")
+    .getOrCreate()
+)
+stream = add_event_date(stream_source(spark, src, max_files_per_trigger=1))
+write_file_sink(stream, out, ckpt, partition_cols=("event_date",))
+"""
+
+
+def _entries(path: str) -> list[str]:
+    """A checkpoint log's committed entries (no in-flight temp files)."""
+    try:
+        return [n for n in os.listdir(path) if not n.startswith(".")]
+    except FileNotFoundError:
+        return []
+
+
+def test_file_sink_exactly_once_after_sigkill(spark, replay_dir, tmp_path):
+    """SIGKILL the whole sink process (driver and JVM) once two
+    micro-batches have committed, then resume on the same checkpoint in
+    another JVM: the committed output is exactly the input, with no
+    event lost or written twice."""
+    chunks = sorted(n for n in os.listdir(replay_dir) if n.startswith("chunk_"))
+    assert len(chunks) >= 6
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    # The killed JVM cannot clean up its scratch dirs: keep them in tmp_path.
+    local = tmp_path / "local"
+    local.mkdir()
+    root = Path(__file__).resolve().parent.parent
+    log = tmp_path / "child.log"
+    with open(log, "wb") as fh:
+        child = subprocess.Popen(
+            [sys.executable, "-c", _KILLED_SINK, replay_dir, out, ckpt],
+            cwd=root,
+            env={**os.environ, "SPARK_LOCAL_DIRS": str(local)},
+            start_new_session=True,
+            stdout=fh,
+            stderr=subprocess.STDOUT,
+        )
+    try:
+        deadline = time.monotonic() + 180
+        while len(_entries(os.path.join(ckpt, "commits"))) < 2:
+            assert child.poll() is None, log.read_text()[-2000:]
+            assert time.monotonic() < deadline, "sink never committed two batches"
+            time.sleep(0.02)
+    finally:
+        with contextlib.suppress(ProcessLookupError):
+            os.killpg(child.pid, signal.SIGKILL)
+        child.wait(timeout=60)
+    assert child.returncode == -signal.SIGKILL
+    assert len(_entries(os.path.join(ckpt, "commits"))) < len(chunks), (
+        "the sink finished before the kill"
+    )
+
+    write_file_sink(
+        add_event_date(stream_source(spark, replay_dir, max_files_per_trigger=1)),
+        out,
+        ckpt,
+        partition_cols=("event_date",),
+    )
+    source = spark.read.parquet(*(os.path.join(replay_dir, n) for n in chunks))
+    back = spark.read.parquet(out).select(*source.columns)
+    assert back.count() == source.count()
+    assert back.select("event_id").distinct().count() == source.count()
+    # multiset equality: no row missing, none extra
+    assert back.exceptAll(source).count() == 0
+    assert source.exceptAll(back).count() == 0
 
 
 def test_tws_plan_constructs(spark):
