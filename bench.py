@@ -292,15 +292,6 @@ def _stdout_line(payload: dict) -> dict:
             # Python-worker CPU s (Arrow kernels; per-key map in
             # bench_last.json py_cpu_s) — r17, VERDICT r16 item 3
             "py_cpu_total": payload.get("py_cpu_total"),
-            # rocksdb state-store canary rows/s (error → null)
-            "stream_rps_rocksdb": payload.get("stream_canary", {})
-            .get("rocksdb", {})
-            .get("rows_per_s"),
-            # streaming canary headline (rows/s; full record in
-            # bench_last.json stream_canary)
-            "stream_rps": payload.get("stream_canary", {}).get(
-                "rows_per_s"
-            ),
             "queries_total": len(ranked) + len(failed),
             "queries_failed_total": len(failed),
             "queries_failed": failed[:keep_failed],
@@ -341,95 +332,6 @@ def _stdout_line(payload: dict) -> dict:
     return build(0, 0, with_t=False)
 
 
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-
-
-def _stream_canary(spark, sf_dir: str) -> dict:
-    """Streaming micro-batch throughput canary (VERDICT r10 item 8).
-
-    Replays the events table as N_CHUNKS distinct micro-batches
-    (maxFilesPerTrigger=1 over the ts-ordered replay dir) through the
-    representative stateful pipeline (tumbling event-time window agg,
-    the reference's identity workload) with trigger(availableNow) to a
-    memory sink, and reports input rows/s of end-to-end micro-batch
-    execution — source listing, state-store commits per batch, and the
-    window agg all inside the measured wall. One number per round in
-    bench_last.json/stdout makes streaming-runtime regressions a
-    visible trend; the q_stream_* keys alone hide slow drift inside
-    per-key noise because each carries sink/rig setup too. Failures
-    degrade to an ``error`` field — the canary must never sink a bench
-    run.
-
-    Since r12 (VERDICT r11 item 4) the canary runs TWICE: once on the
-    default HDFS-backed state store and once on the RocksDB provider
-    (`spark.sql.streaming.stateStore.providerClass`) — the knob every
-    real deployment of a streaming-to-storage sensor engine flips for
-    large state, exercised here instead of merely documented
-    (SCALE.md). The headline stream_rps stays the default-provider
-    number so the cross-round trend line is unbroken; the rocksdb
-    record rides next to it. A missing JNI lib degrades to an ``error``
-    field inside the rocksdb record only."""
-    import shutil
-
-    canary_chunks = 8
-    provider_conf = "spark.sql.streaming.stateStore.providerClass"
-
-    def one_run(stream_ops, replay: str, n_rows: int) -> dict:
-        from sparkstreamingtohdfsofsensorsdata_spark.sources.factory import (
-            stream_source,
-        )
-        from sparkstreamingtohdfsofsensorsdata_spark.streaming.runner import (
-            run_to_memory,
-        )
-
-        stream = stream_source(spark, replay, max_files_per_trigger=1)
-        start = time.perf_counter()
-        out = run_to_memory(stream_ops(stream))
-        out.write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - start
-        return {
-            "rows": n_rows,
-            "micro_batches": canary_chunks,
-            "wall_s": round(wall, 3),
-            "rows_per_s": int(n_rows / wall) if wall > 0 else -1,
-            "load_1m": _load_1m(),
-        }
-
-    try:
-        from sparkstreamingtohdfsofsensorsdata_spark.session import scratch_dir
-        from sparkstreamingtohdfsofsensorsdata_spark.sources.factory import (
-            make_replay_dir,
-        )
-        from sparkstreamingtohdfsofsensorsdata_spark.streaming import ops
-
-        replay = scratch_dir("bench_replay_")
-        try:
-            make_replay_dir(spark, sf_dir, replay, n_chunks=canary_chunks)
-            n_rows = spark.read.parquet(replay).count()
-            record = one_run(ops.tumbling_counts, replay, n_rows)
-            try:
-                spark.conf.set(provider_conf, _ROCKSDB_PROVIDER)
-                rocks = one_run(ops.tumbling_counts, replay, n_rows)
-                rocks["provider"] = "rocksdb"
-            except Exception as exc:  # e.g. JNI lib absent in sandbox
-                print(
-                    f"bench: rocksdb canary FAILED: {exc}", file=sys.stderr
-                )
-                rocks = {"provider": "rocksdb", "error": str(exc)[:200]}
-            finally:
-                spark.conf.unset(provider_conf)
-            record["rocksdb"] = rocks
-        finally:
-            shutil.rmtree(replay, ignore_errors=True)
-        return record
-    except Exception as exc:  # pragma: no cover - canary must not sink bench
-        print(f"bench: stream canary FAILED: {exc}", file=sys.stderr)
-        return {"error": str(exc)[:200]}
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -443,7 +345,6 @@ def main() -> None:
     # UI off as before.
     spark = build_session(app_name="bench", extra_conf=UI_CONF)
     parts = _assemble(measure(spark, sf_dir, list(load_all())))
-    canary = _stream_canary(spark, sf_dir)
     host = _host(spark)
     spark.stop()
 
@@ -475,11 +376,6 @@ def main() -> None:
         # ("<upfront>" = the prepay phases before the first key), and
         # its wall/CPU.
         "memo_payments": parts["memo_payments"],
-        # Streaming throughput canary (VERDICT r10 item 8): one
-        # multi-micro-batch stateful pipeline per round, as rows/s —
-        # streaming regressions show up as a trend across rounds, not
-        # just as wall-clock noise inside individual q_stream_* keys.
-        "stream_canary": canary,
         # Cores, RAM and versions of the host: a number compares only
         # with numbers from the same fingerprint.
         "host": host,

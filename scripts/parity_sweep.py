@@ -2,9 +2,7 @@
 
 Mirrors the driver's correctness gate — Spark result vs DuckDB oracle,
 row count + sorted-column schema + tolerant value compare — over EVERY
-registered key, not just the driver's 50-key/round window. Use before a
-round closes to catch staleness in cohorts the driver hasn't re-checked
-recently.
+registered key, in name order. Run it before a change lands.
 
 Usage: python scripts/parity_sweep.py [--exact] [sf_dir] [skip_key ...]
 Prints one status line per key and a final JSON summary line. Extra
@@ -12,7 +10,7 @@ args name keys to skip.
 
 ``--exact`` (VERDICT r9 item 4) switches to the ZERO-tolerance
 driver-hash-grade compare (conftest.run_parity_exact): no float
-tolerance, no float_dp steps, no -0.0/Decimal canonicalization — and
+tolerance, no -0.0/Decimal canonicalization — and
 flags representation-fragile cells (signed zero / NaN / Decimal) per
 key even when both engines agree. Exact divergences report as
 ``exact-diff`` (distinct from hard FAIL) and the summary separates

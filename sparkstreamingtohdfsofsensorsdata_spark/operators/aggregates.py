@@ -1455,8 +1455,8 @@ def q_agg_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's built-in `skewness`/`kurtosis` use exactly these
     population definitions, while DuckDB's built-ins apply SAMPLE
     bias corrections, so the oracle spells the population formulas
-    from raw power sums instead of calling them. Rounding is 4dp
-    (declared in float_dp): the power-sum expansion the oracle uses
+    from raw power sums instead of calling them. Rounding is 4dp,
+    coarser than the usual 6dp: the power-sum expansion the oracle uses
     cancels catastrophically compared to Spark's streaming central-
     moment updates, and value^4 sums amplify the float-order spread.
 

@@ -166,50 +166,29 @@ def _floats_boundary_equal(lval: float, rval: float) -> bool:
     )
 
 
-def _declared_step_equal(lval: float, rval: float, step: float) -> bool:
-    """A single flip of the column's DECLARED last rounded digit, at any
-    magnitude. _floats_boundary_equal cannot know a column's rounding
-    precision, so its magnitude heuristic rejects a genuine 2-dp tie
-    flip on a mid-magnitude column (|value| < 1e5 — ADVICE r6). A query
-    that rounds coarser than 6 dp declares the dp in its QuerySpec
-    (float_dp), and the declared step is tolerated here EXACTLY like
-    the inferred one: one step, up to subtraction noise of the values."""
-    diff = abs(lval - rval)
-    ulp = max(math.ulp(lval), math.ulp(rval))
-    return abs(diff - step) <= 8 * ulp
-
-
-def _cell_close(lval, rval, step: float | None = None) -> bool:
+def _cell_close(lval, rval) -> bool:
     if isinstance(lval, float) and isinstance(rval, float):
-        if _floats_boundary_equal(lval, rval):
-            return True
-        return step is not None and _declared_step_equal(lval, rval, step)
+        return _floats_boundary_equal(lval, rval)
     if isinstance(lval, tuple) and isinstance(rval, tuple):
         # collected arrays carry the same float classes element-wise —
         # exact == here hard-failed the documented-tolerated scalar
         # flips whenever they sat inside an ArrayType column (review r6)
         return len(lval) == len(rval) and all(
-            _cell_close(a, b, step) for a, b in zip(lval, rval)
+            _cell_close(a, b) for a, b in zip(lval, rval)
         )
     return lval == rval
 
 
-def _row_close(lrow, rrow, steps) -> bool:
+def _row_close(lrow, rrow) -> bool:
     return len(lrow) == len(rrow) and all(
-        _cell_close(lval, rval, step)
-        for lval, rval, step in zip(lrow, rrow, steps)
+        _cell_close(lval, rval) for lval, rval in zip(lrow, rrow)
     )
 
 
-def assert_cells_close(left, right, steps=None):
+def assert_cells_close(left, right):
     """Cell equality with the driver's exactness, modulo the two
-    documented float boundary classes (_floats_boundary_equal) and any
-    per-column declared rounding step — applied recursively inside
-    collected arrays.
-
-    ``steps`` aligns with the rows' (column-name-sorted) cell order:
-    10^-dp for columns with a declared rounding precision, None
-    otherwise.
+    documented float boundary classes (_floats_boundary_equal) —
+    applied recursively inside collected arrays.
 
     Pairing is positional first (both sides sort by the coarse key, so
     tolerated flips normally stay aligned), but a flip CROSSING a
@@ -221,11 +200,9 @@ def assert_cells_close(left, right, steps=None):
     rescued, and the re-pair is O(k^2) in the mismatch count, not the
     row count."""
     assert len(left) == len(right)
-    if steps is None:
-        steps = (None,) * (len(left[0]) if left else 0)
     mismatched: list[int] = [
         i for i, (lrow, rrow) in enumerate(zip(left, right))
-        if not _row_close(lrow, rrow, steps)
+        if not _row_close(lrow, rrow)
     ]
     if not mismatched:
         return
@@ -233,7 +210,7 @@ def assert_cells_close(left, right, steps=None):
     for i in mismatched:
         match = next(
             (j for j, rrow in enumerate(remaining_right)
-             if _row_close(left[i], rrow, steps)),
+             if _row_close(left[i], rrow)),
             None,
         )
         assert match is not None, (left[i], right[i])
@@ -290,9 +267,9 @@ def _scan_cell_risks(value, out: dict) -> None:
 
 
 def run_parity_exact(spark, duck, name: str, sf_dir: str = SF_DIR):
-    """Zero-tolerance, driver-hash-grade compare (VERDICT r9 item 4):
-    NO float tolerance, NO ``float_dp`` steps, NO -0.0/Decimal/bool
-    canonicalization — the exact value-token multiset must match.
+    """Zero-tolerance, driver-hash-grade compare: NO float tolerance,
+    NO -0.0/Decimal/bool canonicalization — the exact value-token
+    multiset must match.
 
     This is strictly harsher than what the driver enforces, and it is
     the gate that catches what :func:`run_parity` is designed to
@@ -383,10 +360,5 @@ def run_parity(spark, duck, name: str, sf_dir: str = SF_DIR):
     assert len(s_canon) == len(d_canon), (
         f"{name}: row count {len(s_canon)} vs oracle {len(d_canon)}"
     )
-    unknown_dp = set(spec.float_dp) - set(s_cols)
-    assert not unknown_dp, f"{name}: float_dp declares absent columns {unknown_dp}"
-    steps = tuple(
-        10.0 ** -spec.float_dp[c] if c in spec.float_dp else None for c in s_cols
-    )
-    assert_cells_close(s_canon, d_canon, steps)
+    assert_cells_close(s_canon, d_canon)
     return len(s_canon)

@@ -132,41 +132,24 @@ def test_infinity_never_equals_finite_or_opposite(x):
         assert not eq(x, -inf)
 
 
-# --- declared per-column rounding steps (ADVICE r6) --------------------
+# --- row comparator: no column gets more than the two classes ---------
 
-from conftest import _cell_close, assert_cells_close
-
-
-def test_declared_step_rescues_mid_magnitude_flip():
-    # A genuine 2-dp tie flip on a mid-magnitude column: the magnitude
-    # heuristic rejects it (scale*1e-7 < 1e-2 below 1e5), a declared
-    # dp=2 accepts exactly one step.
-    assert not eq(1234.56, 1234.57)
-    assert _cell_close(1234.56, 1234.57, step=1e-2)
-    assert _cell_close(43.18, 43.19, step=1e-2)
-
-
-def test_declared_step_still_rejects_multi_step_drift():
-    assert not _cell_close(1234.56, 1234.58, step=1e-2)  # two steps
-    assert not _cell_close(1234.5, 1234.6, step=1e-2)    # ten steps
-    assert not _cell_close(1234.565, 1234.57, step=1e-2)  # half a step
-
-
-def test_declared_step_applies_inside_arrays():
-    assert _cell_close((1234.56, 7.0), (1234.57, 7.0), step=1e-2)
-    assert not _cell_close((1234.56, 7.0), (1234.58, 7.0), step=1e-2)
+from conftest import assert_cells_close
 
 
 def test_undeclared_columns_keep_strict_rules():
-    # steps=None for a column -> behavior identical to the bare
-    # comparator, flip classes only.
-    assert_cells_close([(43.181818,)], [(43.181819,)], steps=(None,))
-    try:
-        assert_cells_close([(1234.56,)], [(1234.57,)], steps=(None,))
-    except AssertionError:
-        pass
-    else:
-        raise AssertionError("undeclared 2-dp flip must not pass")
+    # every column gets the bare comparator's flip classes only: a 2-dp
+    # flip at mid magnitude is a real divergence, also inside an array.
+    assert_cells_close([(43.181818,)], [(43.181819,)])
+    assert_cells_close([((43.181818, 7.0),)], [((43.181819, 7.0),)])
+    for left, right in (([(1234.56,)], [(1234.57,)]),
+                        ([((1234.56, 7.0),)], [((1234.57, 7.0),)])):
+        try:
+            assert_cells_close(left, right)
+        except AssertionError:
+            pass
+        else:
+            raise AssertionError("a mid-magnitude 2-dp flip must not pass")
 
 
 # --- multiset re-pair for coarse-boundary crossings (ADVICE r6) --------
@@ -180,7 +163,7 @@ def test_multiset_repair_rescues_coarse_boundary_crossing():
     # row with its tolerated-flip partner.
     left = [(0.0, "x"), (1e-6, "y")]
     right = [(0.0, "y"), (1e-6, "x")]
-    assert_cells_close(left, right, steps=(None, None))
+    assert_cells_close(left, right)
 
 
 def test_multiset_repair_still_fails_real_divergence():

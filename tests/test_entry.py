@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import __spark_entry__ as entrymod
+from sparkstreamingtohdfsofsensorsdata_spark import registry
 
 
 def test_entry_returns_rows(spark):
@@ -18,6 +19,8 @@ def test_queries_and_oracles_align():
     assert qs, "no queries registered"
     # every oracle key must have a query
     assert set(os_) <= set(qs)
+    # every registered key, once, in registration order
+    assert list(registry.load_all()) == list(registry.REGISTRY)
 
 
 def test_flagship_parity(spark, duck):

@@ -135,100 +135,6 @@ def test_dedup_memos_evict_superseded_same_path_entries(spark):
     _clear_memos(spark)
 
 
-def test_registry_window_is_the_stale_cohort():
-    """The rotation policy (VERDICT r15 items 1-2, amended by VERDICT
-    r16 item 1 for round 17): the driver checks a 50-key prefix of
-    load_all(), so the prefix must be (a) the pinned optimization
-    blast radius — keys whose physical plan the previous round rewrote
-    without a driver re-verdict since (ROTATION_BLAST_HEAD; empty in a
-    round with no standing blast radius) — then (b) the keys with NO
-    driver verdict in any CORRECTNESS artifact the rotation could see,
-    then (c) the stalest cohorts in round order (alphabetical within a
-    cohort), truncated to fill the window. Computed from the committed
-    driver artifacts, not hand-pinned indices, so the assertion IS the
-    rotation policy.
-
-    The artifact glob is FILTERED to rounds < registry.ROTATION_ROUND:
-    the driver lands CORRECTNESS_r{N}.json AFTER the builder's close, so
-    an unfiltered glob would flip the cohorts and turn this test red at
-    every round-open (VERDICT r15 item 2). The pin keeps the suite
-    green on a tree carrying newer artifacts; re-rotation at the NEXT
-    round is a manual step (ROTATION_ROUND = max artifact round + 1),
-    not a standing red test."""
-    import glob
-    import json
-    import re
-
-    from sparkstreamingtohdfsofsensorsdata_spark.registry import (
-        ROTATION_BLAST_HEAD,
-        ROTATION_NEW_KEYS,
-        ROTATION_ROUND,
-        VERIFICATION_PRIORITY,
-    )
-
-    latest: dict[str, int] = {}
-    root = os.path.join(os.path.dirname(__file__), "..")
-    artifacts = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    assert artifacts, "driver CORRECTNESS artifacts missing"
-    seen_rounds = []
-    for f in artifacts:
-        r = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        seen_rounds.append(r)
-        if r >= ROTATION_ROUND:
-            continue  # landed after this rotation was computed
-        d = json.load(open(f))
-        for k in d.get("queries", d):
-            if k.startswith("q_"):
-                latest[k] = max(latest.get(k, 0), r)
-    allk = set(registry.load_all())
-    # the pinned blast radius heads the window (VERDICT r16 item 1) and
-    # must consist of registered keys
-    assert set(ROTATION_BLAST_HEAD) <= allk
-    # mid-round additions queue at the VP tail and head the NEXT
-    # rotation — they are never-checked too, but were not visible when
-    # this window was computed
-    never = sorted(
-        allk - set(latest) - set(ROTATION_NEW_KEYS) - set(ROTATION_BLAST_HEAD)
-    )
-    by_round: dict[int, list] = {}
-    for k, v in latest.items():
-        if k in allk and k not in ROTATION_BLAST_HEAD:
-            by_round.setdefault(v, []).append(k)
-    # blast radius first, then never-checked, then cohorts oldest-round
-    # first; stop at the first cohort that crosses the 50-key boundary —
-    # its tail (sliced alphabetically) is the queue for the NEXT
-    # rotation.
-    expected = list(ROTATION_BLAST_HEAD) + list(never)
-    for r in sorted(by_round):
-        if len(expected) >= 50:
-            break
-        expected.extend(sorted(by_round[r]))
-    policy_msg = (
-        "driver verification window diverges from the stale-cohort "
-        f"policy (rotated for round {ROTATION_ROUND}, computed from "
-        f"artifacts < r{ROTATION_ROUND}; committed artifact rounds: "
-        f"{sorted(seen_rounds)}). If a NEW CORRECTNESS artifact landed, "
-        "re-rotate VERIFICATION_PRIORITY and bump ROTATION_ROUND in "
-        "registry.py."
-    )
-    front = list(registry.load_all())[:50]
-    assert front == expected[:50], policy_msg
-    assert front == list(VERIFICATION_PRIORITY)[:50], policy_msg
-    # positions 51+: the sliced cohort's remainder queues for the next
-    # rotation (keys registered mid-round append behind it as they land)
-    queue = list(VERIFICATION_PRIORITY)[50:]
-    assert queue[: len(expected) - 50] == expected[50:], policy_msg
-    # additions registered after the rotation sit at the very tail
-    tail = queue[len(expected) - 50 :]
-    assert tail == list(ROTATION_NEW_KEYS), policy_msg
-    assert len(set(front)) == 50
-    # keys the previous driver window greened must NOT occupy slots
-    # (r16-greened picks; the blast-radius head legitimately re-checks
-    # keys older windows greened, so the canaries must be outside it)
-    for greened in ("q_agg_observe", "q_fn_url_parse", "q_ts_ewma"):
-        assert greened not in front, policy_msg
-
-
 def test_graph_family_docstring_in_sync():
     """VERDICT r10 item 5: the copurchase_edges docstring enumerates the
     graph kernels that share the edge intermediate; this assertion

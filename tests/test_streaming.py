@@ -11,6 +11,7 @@ sound oracle).
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import signal
 import subprocess
@@ -169,33 +170,65 @@ def _run_with_ckpt(spark, df, ckpt: str, name: str, output_mode: str = "complete
             q.stop()
 
 
-def test_windowed_agg_restart_recovery(spark, tmp_path):
+STATE_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
+def _windowed_restart_recovery(spark, tmp_path, provider: str | None) -> None:
     """Kill-and-resume for STATEFUL aggregation: a second availableNow
     pass on the same checkpoint must recover window state, fold in the
-    new chunk, and emit exactly the batch answer over all data."""
-    ev = load(spark, SF_DIR, "events")
-    first = ev.filter(F.col("ts") < F.lit("2024-01-15"))
-    second = ev.filter(F.col("ts") >= F.lit("2024-01-15"))
-    assert first.count() > 0 and second.count() > 0
-    src = tmp_path / "src"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    cols = ["window_start", "event_type", "n", "value_sum"]
+    new chunk, and emit exactly the batch answer over all data. Both
+    passes run on ``provider`` (None: Spark's default state store); the
+    session's prior provider comes back afterwards."""
+    prior = spark.conf.get(STATE_PROVIDER_KEY, None)
+    try:
+        if provider is not None:
+            spark.conf.set(STATE_PROVIDER_KEY, provider)
+        expected_provider = provider or spark.conf.get(STATE_PROVIDER_KEY)
+        ev = load(spark, SF_DIR, "events")
+        first = ev.filter(F.col("ts") < F.lit("2024-01-15"))
+        second = ev.filter(F.col("ts") >= F.lit("2024-01-15"))
+        assert first.count() > 0 and second.count() > 0
+        src = tmp_path / "src"
+        src.mkdir()
+        ckpt = str(tmp_path / "ckpt")
+        cols = ["window_start", "event_type", "n", "value_sum"]
 
-    _write_chunk(first, str(src / "c0.parquet"))
-    t1 = _run_with_ckpt(
-        spark, ops.tumbling_counts(stream_source(spark, str(src))), ckpt, "rr_agg_1"
-    )
-    assert _rows(t1, *cols) == _rows(ops.tumbling_counts(first), *cols)
+        _write_chunk(first, str(src / "c0.parquet"))
+        t1 = _run_with_ckpt(
+            spark, ops.tumbling_counts(stream_source(spark, str(src))), ckpt, "rr_agg_1"
+        )
+        assert _rows(t1, *cols) == _rows(ops.tumbling_counts(first), *cols)
 
-    # "crash": the first query object is gone; only the checkpoint survives.
-    _write_chunk(second, str(src / "c1.parquet"))
-    t2 = _run_with_ckpt(
-        spark, ops.tumbling_counts(stream_source(spark, str(src))), ckpt, "rr_agg_2"
-    )
-    # complete mode re-emits ALL windows: pre-restart windows must come
-    # back from the recovered state store, not just the new chunk.
-    assert _rows(t2, *cols) == _rows(ops.tumbling_counts(ev), *cols)
+        # "crash": the first query object is gone; only the checkpoint survives.
+        _write_chunk(second, str(src / "c1.parquet"))
+        t2 = _run_with_ckpt(
+            spark, ops.tumbling_counts(stream_source(spark, str(src))), ckpt, "rr_agg_2"
+        )
+        # complete mode re-emits ALL windows: pre-restart windows must come
+        # back from the recovered state store, not just the new chunk.
+        assert _rows(t2, *cols) == _rows(ops.tumbling_counts(ev), *cols)
+
+        # The checkpoint pins the provider it was written with (line 2 of
+        # an offset file is the batch metadata), so a run that silently
+        # fell back to another store cannot pass as this one.
+        meta = json.loads((tmp_path / "ckpt" / "offsets" / "0").read_text().splitlines()[1])
+        assert meta["conf"][STATE_PROVIDER_KEY] == expected_provider
+    finally:
+        if prior is None:
+            spark.conf.unset(STATE_PROVIDER_KEY)
+        else:
+            spark.conf.set(STATE_PROVIDER_KEY, prior)
+
+
+def test_windowed_agg_restart_recovery(spark, tmp_path):
+    _windowed_restart_recovery(spark, tmp_path, None)
+
+
+def test_windowed_agg_restart_recovery_rocksdb(spark, tmp_path):
+    _windowed_restart_recovery(spark, tmp_path, ROCKSDB_PROVIDER)
 
 
 def _plain_file_sink(df, out: str, ckpt: str) -> None:
